@@ -739,7 +739,7 @@ object Dedup {
     * the HNSW broadcast-local-walk discipline (guide §1.2 step 1)
     * applied to the CC loops, whose measured bench profile is ~0.7 s of
     * pure fixed stage overhead PER ROUND on a few-thousand-row frame
-    * (ProbeCC: g4's 3573-edge graph paid ~4 s of scheduler round-trips
+    * (OPTIMIZATION_r18.md §4: g4's 3573-edge graph paid ~4 s of scheduler round-trips
     * for ~µs of arithmetic). An edge set under the gate is
     * broadcast-sized by definition, and candidate-pair graphs are a
     * sliver of the corpus BY CONSTRUCTION (LSH/threshold screens);

@@ -463,7 +463,7 @@ object Hnsw {
     // applied to the reporter): below [[ReportLocalMaxBytesKey]] the
     // top-K + replica re-expansion runs in one driver-side pass over the
     // collected visited/corpus slivers ([[expandTopKLocal]], spec-pinned
-    // bit-identical) — ProbeS23S24 measured the frame reporter at
+    // bit-identical) — OPTIMIZATION_r18.md §10 measured the frame reporter at
     // 0.7–1.6 s of fixed stage overhead per read (~6 broadcast-join
     // stages over a 13.5k-row corpus), × 4 concurrent in s24 and once
     // per s21/s22/s23/p11 read. Above the gate the frame pass streams
@@ -1219,7 +1219,7 @@ object Hnsw {
     * pass runs driver-side over the collected slivers
     * ([[deleteLocal]], spec-pinned bit-identical); above it this
     * declarative frame pass stands unchanged — the only shape that
-    * works when the adjacency is corpus-sized. ProbeS23S24 measured
+    * works when the adjacency is corpus-sized. OPTIMIZATION_r18.md §9 measured
     * the frame pass at 3.2–6.7 s of fixed stage overhead for a
     * 13.5k-row adjacency and 39 doomed ids — ~15 stages of scheduler
     * round-trips for microseconds of arithmetic. */

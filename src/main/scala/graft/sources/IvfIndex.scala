@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{TopK, VectorExpressions => V}
 
@@ -20,14 +20,15 @@ import graft.functions.{TopK, VectorExpressions => V}
   *     the codegen'd argmax (graft.functions.NearestIndex) over the
   *     BROADCAST codebook — a map-only scan, zero corpus shuffle — and
   *     write the store PARTITIONED BY centroid id (the on-disk inverted
-  *     lists).
+  *     lists), committed through a [[StoreManifest]] that carries the
+  *     codebook inline.
   *  3. `probe`: embed queries, rank centroids per query with the same
   *     broadcast codebook, take the `nprobe` nearest lists, and scan
-  *     ONLY those partitions — the broadcast probe join on the cid
-  *     partition column triggers DYNAMIC PARTITION PRUNING, so the
-  *     probed-list set never rides through the driver and pruning
-  *     scales to arbitrary query batches; exact cosine top-k inside the
-  *     probed lists via the bounded aggregate.
+  *     ONLY those partitions of the committed snapshot — the broadcast
+  *     probe join on the cid partition column triggers DYNAMIC PARTITION
+  *     PRUNING, so the probed-list set never rides through the driver and
+  *     pruning scales to arbitrary query batches; exact cosine top-k
+  *     inside the probed lists via the bounded aggregate.
   *
   * Recall/latency trade is `k` (list granularity) × `nprobe` (lists
   * visited): probe cost is nprobe/k of the corpus, recall rises with
@@ -59,14 +60,20 @@ object IvfIndex {
     Seq((centroids.indices.toArray, centroids)).toDF("cids", "cembs")
   }
 
-  /** Map-only coarse assignment + partitioned write: one scan of the
-    * corpus, inverted lists materialized as `cid=<i>` directories. */
-  def build(embeddings: DataFrame, centroids: Array[Array[Float]], path: String): Unit = {
-    val s = embeddings.sparkSession
-    embeddings.crossJoin(broadcast(codebookDf(s, centroids)))
+  /** Map-only coarse assignment: (vec_id, embedding, cid). */
+  private def assign(embeddings: DataFrame, centroids: Array[Array[Float]]): DataFrame =
+    embeddings.crossJoin(broadcast(codebookDf(embeddings.sparkSession, centroids)))
       .select(col("vec_id"), col("embedding"),
         element_at(col("cids"), V.nearest(col("embedding"), col("cembs")) + 1).as("cid"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(path)
+
+  /** Map-only coarse assignment + partitioned write: one scan of the
+    * corpus, inverted lists materialized as `cid=<i>` directories. The
+    * committed manifest replaces any previous content of `path` and
+    * carries the codebook inline. */
+  def build(embeddings: DataFrame, centroids: Array[Array[Float]], path: String): Unit = {
+    val s = embeddings.sparkSession
+    StoreManifest.write(s, path, assign(embeddings, centroids), "cid",
+      StoreManifest.latest(s, path), keep = _ => false, codebook = Some(centroids))
   }
 
   /** Incremental refresh: absorb an UPSERT batch into an existing index
@@ -75,7 +82,7 @@ object IvfIndex {
     * customTrainDataController.js:56-62, re-expressed for the inverted
     * file). The new batch is coarse-assigned MAP-ONLY against the
     * STORED codebook — same broadcast argmax as [[build]], zero corpus
-    * shuffle, the existing lists are never read — and appended as new
+    * shuffle, the existing lists are never read — and committed as new
     * files inside only the `cid=` directories it hashes into.
     * Because assignment is a pure function of (embedding, codebook),
     * an appended store is bit-identical in content to a from-scratch
@@ -83,10 +90,11 @@ object IvfIndex {
     * probes need no freshness special-casing. */
   def append(newBatch: DataFrame, centroids: Array[Array[Float]], path: String): Unit = {
     val s = newBatch.sparkSession
-    newBatch.crossJoin(broadcast(codebookDf(s, centroids)))
-      .select(col("vec_id"), col("embedding"),
-        element_at(col("cids"), V.nearest(col("embedding"), col("cembs")) + 1).as("cid"))
-      .write.mode(SaveMode.Append).partitionBy("cid").parquet(path)
+    val base = StoreManifest.latest(s, path)
+    require(base.flatMap(_.codebook).forall(_.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq),
+      s"$path: append must assign against the store's own codebook")
+    StoreManifest.write(s, path, assign(newBatch, centroids), "cid", base, keep = _ => true,
+      codebook = Some(centroids))
   }
 
   /** Staleness metric — the retrain signal for an append-maintained
@@ -98,7 +106,7 @@ object IvfIndex {
     * (n_vectors, n_reassigned, reassign_ppm). */
   def staleness(s: SparkSession, path: String,
       retrained: Array[Array[Float]]): DataFrame = {
-    s.read.parquet(path)
+    StoreManifest.read(s, path)
       .crossJoin(broadcast(codebookDf(s, retrained)))
       .select(col("cid"),
         element_at(col("cids"), V.nearest(col("embedding"), col("cembs")) + 1).as("new_cid"))
@@ -116,8 +124,14 @@ object IvfIndex {
     * caller's, not the store's). */
   def probe(s: SparkSession, path: String, queries: DataFrame,
       centroids: Array[Array[Float]], k: Int, nprobe: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    val cb = codebookDf(s, centroids)
+      excludeSelf: Boolean = true): DataFrame =
+    probe(StoreManifest.read(s, path), queries, centroids, k, nprobe, excludeSelf)
+
+  /** [[probe]] over an already-resolved store snapshot. */
+  private[sources] def probe(store: DataFrame, queries: DataFrame,
+      centroids: Array[Array[Float]], k: Int, nprobe: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val cb = codebookDf(store.sparkSession, centroids)
     // rank ALL centroids per query (|codebook| is broadcast-small), keep
     // nprobe; qcid stays the scan's partition-column type so the join
     // below keys on the bare partition attribute
@@ -137,14 +151,14 @@ object IvfIndex {
     // the probe join IS the pruning: broadcasting the (queries × nprobe)-
     // row probe set against the cid PARTITION column hands Spark a
     // dynamic partition-pruning subquery — the scan reads only the
-    // probed cid= directories (plan-asserted: dynamicpruningexpression
-    // in PartitionFilters), and the probed-id set never rides through
-    // the driver, so a thousand-query batch prunes exactly like a
-    // one-query batch
+    // probed cid= partitions of the snapshot (plan-asserted:
+    // dynamicpruningexpression in PartitionFilters), and the probed-id set
+    // never rides through the driver, so a thousand-query batch prunes
+    // exactly like a one-query batch
     val joinCond =
       if (excludeSelf) col("cid") === col("qcid") && col("vec_id") =!= col("qid")
       else col("cid") === col("qcid")
-    s.read.parquet(path)
+    store
       .join(broadcast(qcids), joinCond)
       .groupBy("qid")
       .agg(TopK.topKByScore(V.cosine(col("qemb"), col("embedding")), col("vec_id"), k).as("nbrs"))

@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   * generation.
   *
   * Generations, not in-place rewrites: a rebuild writes `gen_<g+1>`
-  * beside the live `gen_<g>` and flips the current pointer (the max
-  * generation present) — readers never observe a half-written index,
-  * and a 100 TB rebuild streams corpus → new directory without
-  * touching the serving copy. Appends go into the CURRENT generation's
-  * `cid=` directories only (IvfIndex.append — map-only against the
-  * stored codebook).
+  * beside the live `gen_<g>`, and a generation exists for readers only
+  * once its [[StoreManifest]] is committed — with its codebook inline,
+  * so a probe never sees a generation without its codebook, and a
+  * 100 TB rebuild streams corpus → new directory without touching the
+  * serving copy. Appends go into the CURRENT generation's `cid=`
+  * directories only (IvfIndex.append — map-only against the stored
+  * codebook), each as one committed manifest version.
   *
   * Centroid ALIGNMENT before the staleness vote: k-means on the grown
   * store returns the same clusters under an arbitrary INDEX
@@ -35,44 +36,36 @@ object VectorStoreMaintenance {
       reassignPpm: Long, retrained: Boolean)
 
   private def genPath(root: String, g: Int) = s"$root/gen_$g"
-  private def codebookPath(root: String, g: Int) = s"$root/codebook_$g"
 
-  /** The live generation (max present; -1 for an empty/absent root).
-    * Listed through Hadoop's FileSystem against the session's
-    * configuration — the same path I/O the index reads/writes use — so
-    * a non-local root (HDFS/S3) resolves instead of silently returning
-    * -1 the way a driver-local java.io listing would; the pattern is
-    * anchored so a sibling merely CONTAINING "gen_<n>" never counts. */
+  /** The live generation: the highest `gen_<n>` with a committed manifest
+    * (-1 for an empty/absent root). Listed through Hadoop's FileSystem
+    * against the session's configuration — the same path I/O the index
+    * reads/writes use — so a non-local root (HDFS/S3) resolves; the
+    * pattern is anchored so a sibling merely CONTAINING "gen_<n>" never
+    * counts, and a directory a crashed rebuild left without a manifest
+    * is not a generation. */
   def currentGen(s: SparkSession, root: String): Int = {
     val path = new org.apache.hadoop.fs.Path(root)
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) -1
     else fs.listStatus(path)
       .flatMap(st => "^gen_(\\d+)$".r.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt))
-      .foldLeft(-1)(math.max)
+      .sorted(Ordering[Int].reverse)
+      .find(g => StoreManifest.latest(s, genPath(root, g)).isDefined)
+      .getOrElse(-1)
   }
 
-  private def saveCodebook(s: SparkSession, root: String, g: Int,
-      cents: Array[Array[Float]]): Unit = {
-    import s.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cid", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(codebookPath(root, g))
-  }
+  private def codebookOf(snap: StoreSnapshot, at: String): Array[Array[Float]] =
+    snap.codebook.getOrElse(throw new IllegalStateException(s"$at has no codebook"))
 
-  /** The stored codebook of a generation, cid-ordered. */
+  /** The stored codebook of a generation, cid-ordered (read from its
+    * manifest; no Spark job). */
   def loadCodebook(s: SparkSession, root: String, g: Int): Array[Array[Float]] =
-    s.read.parquet(codebookPath(root, g))
-      .orderBy("cid").collect()
-      .map(_.getSeq[Float](1).toArray)
+    codebookOf(StoreManifest.snapshot(s, genPath(root, g)), genPath(root, g))
 
   /** Bootstrap generation 0 from a base corpus. */
-  def init(embeddings: DataFrame, k: Int, root: String, seed: Long = 42L): Unit = {
-    val s = embeddings.sparkSession
-    val cents = IvfIndex.train(embeddings, k, seed)
-    IvfIndex.build(embeddings, cents, genPath(root, 0))
-    saveCodebook(s, root, 0, cents)
-  }
+  def init(embeddings: DataFrame, k: Int, root: String, seed: Long = 42L): Unit =
+    IvfIndex.build(embeddings, IvfIndex.train(embeddings, k, seed), genPath(root, 0))
 
   private def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -111,25 +104,24 @@ object VectorStoreMaintenance {
     require(g >= 0, s"no generation under $root — call init first")
     val stored = loadCodebook(s, root, g)
     IvfIndex.append(batch.select("vec_id", "embedding"), stored, genPath(root, g))
-    val store = s.read.parquet(genPath(root, g)).select("vec_id", "embedding")
+    val store = StoreManifest.read(s, genPath(root, g)).select("vec_id", "embedding")
       .localCheckpoint() // pinned: read by train, staleness, and a rebuild
     val candidate = alignTo(stored,
       IvfIndex.train(store, stored.length, seed))
     val st = IvfIndex.staleness(s, genPath(root, g), candidate).collect()(0)
     val (n, ppm) = (st.getLong(0), st.getLong(2))
     val retrain = ppm > thresholdPpm
-    if (retrain) {
-      IvfIndex.build(store, candidate, genPath(root, g + 1))
-      saveCodebook(s, root, g + 1, candidate)
-    }
+    if (retrain) IvfIndex.build(store, candidate, genPath(root, g + 1))
     MaintenanceReport(if (retrain) g + 1 else g, n, ppm, retrain)
   }
 
-  /** Serve against the live generation with its own codebook. */
+  /** Serve against the live generation with its own codebook, both from
+    * one resolved snapshot. */
   def probe(s: SparkSession, root: String, queries: DataFrame, k: Int,
       nprobe: Int, excludeSelf: Boolean = false): DataFrame = {
-    val g = currentGen(s, root)
-    IvfIndex.probe(s, genPath(root, g), queries,
-      loadCodebook(s, root, g), k, nprobe, excludeSelf)
+    val path = genPath(root, currentGen(s, root))
+    val snap = StoreManifest.snapshot(s, path)
+    IvfIndex.probe(StoreManifest.read(s, path, snap), queries, codebookOf(snap, path),
+      k, nprobe, excludeSelf)
   }
 }

@@ -1,67 +1,65 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.functions.{TopK, VectorExpressions => V}
 
 /** On-disk vector store: the chunk index (graft.operators.RagPipeline.ingest)
-  * persisted PARTITIONED BY its LSH bucket. A query probes only its own
-  * bucket's directory — at 100 TB the scan cost of a retrieval is
-  * |bucket|, not |corpus|, enforced by partition pruning at the file
-  * level (the on-disk analogue of Pinecone's namespace+index layout,
-  * embeddingmodel.js).
+  * persisted PARTITIONED BY its LSH bucket, addressed through a
+  * [[StoreManifest]] (the on-disk analogue of Pinecone's namespace+index
+  * layout, embeddingmodel.js). Every write commits a new manifest version;
+  * every read scans the files of the newest committed one, so a retrieve
+  * lists no directory, infers no schema, and sees one whole snapshot.
   *
-  * Retrieval collects the query batch's bucket ids (a handful of ints —
-  * driver-side by design: it parameterizes the SCAN, it is not data
-  * processing) and pushes them as a static partition filter; the
-  * subsequent bucket-equality join + cosine top-k is the s2 shape.
+  * A query probes only its own bucket's files — the scan cost of a
+  * retrieval is |bucket|, not |corpus|. A query batch that already sits
+  * on the driver (a local relation, how loadbench and the ingest callers
+  * pass questions) hands its bucket ids to the scan as a static partition
+  * filter; any other batch is joined broadcast on the bucket partition
+  * column, which Spark turns into a dynamic partition-pruning filter. The
+  * bucket-equality join + cosine top-k after the scan is the s2 shape.
   */
 object VectorStoreSink {
 
-  def write(index: DataFrame, path: String): Unit =
-    index.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
+  private val Partition = "bucket"
+
+  def write(index: DataFrame, path: String): Unit = {
+    val s = index.sparkSession
+    StoreManifest.write(s, path, index, Partition, StoreManifest.latest(s, path), keep = _ => false)
+  }
+
+  /** Append one streaming micro-batch of index rows. The batch id is
+    * recorded in the manifest, so a replayed batch commits once. */
+  def append(index: DataFrame, path: String, batchId: Long): Unit = {
+    val s = index.sparkSession
+    val base = StoreManifest.latest(s, path)
+    if (!base.flatMap(_.batchId).exists(_ >= batchId))
+      StoreManifest.write(s, path, index, Partition, base, keep = _ => true,
+        batchId = Some(batchId))
+  }
 
   /** Delete an id batch from the store, rewriting ONLY the partitions
     * that contain those ids (partition-pruned copy-on-write — the
     * on-disk form of embeddingmodel.deleteEmbeddingsByIds).
     *
-    * Shape: the affected-bucket set is derived as a FRAME (distinct
-    * buckets of the matching ids — bounded by |ids|), and the rewrite
-    * scan joins it broadcast on the bucket PARTITION column, so dynamic
-    * partition pruning restricts the read to affected `bucket=`
-    * directories; dynamic partitionOverwriteMode then commits only the
-    * partitions present in the written frame. Unaffected partitions are
-    * neither read (beyond the pushed-filter id probe) nor rewritten —
-    * at 100 TB a 1000-id delete touches ~1000 lists, not the corpus.
-    * The localCheckpoint materializes the survivors before the
-    * overwrite so the write never reads the files it replaces. */
+    * The affected buckets (bounded by |ids|) are found with one pushed-
+    * filter scan of the snapshot; their surviving rows are written as new
+    * files, and the next manifest names those files in place of the
+    * affected buckets' old ones. A bucket left empty simply drops out of
+    * the manifest. Unaffected buckets are neither read (beyond the id
+    * probe) nor rewritten, and a reader sees either the whole delete or
+    * none of it. */
   def deleteByIds(s: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    val store = s.read.parquet(path)
-    // both slivers MATERIALIZE (localCheckpoint) before the overwrite:
-    // their lineage reads the very files the write replaces
+    val base = StoreManifest.snapshot(s, path)
+    val store = StoreManifest.read(s, path, base)
     val affected = store.filter(col("chunk_uid").isin(ids: _*))
-      .select("bucket").distinct().localCheckpoint()
-    val survivors = store.join(broadcast(affected), Seq("bucket"))
-      .filter(!col("chunk_uid").isin(ids: _*))
-      .localCheckpoint()
-    // a fully-emptied bucket writes no partition under dynamic overwrite,
-    // which would leave its old files (and the deleted ids) in place —
-    // compute those up front and drop the directories after the commit;
-    // the set is bounded by |ids| and directory removal is file-system
-    // management, not data processing
-    val emptied = affected.join(survivors.select("bucket").distinct(),
-        Seq("bucket"), "left_anti")
-      .collect().map(_.get(0))
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if (emptied.nonEmpty) {
-      val base = new org.apache.hadoop.fs.Path(path)
-      val fs = base.getFileSystem(s.sessionState.newHadoopConf())
-      emptied.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(base, s"bucket=$b"), true)
-      }
+      .select(Partition).distinct().collect().map(_.get(0))
+    if (affected.nonEmpty) {
+      val keys = affected.map(_.toString).toSet
+      val survivors = store.filter(col(Partition).isin(affected.toSeq: _*))
+        .filter(!col("chunk_uid").isin(ids: _*))
+      StoreManifest.write(s, path, survivors, Partition, Some(base), keep = b => !keys(b))
     }
   }
 
@@ -74,15 +72,22 @@ object VectorStoreSink {
       // the selective predicate Spark's DPP heuristic requires on the
       // build side before it will inject partition pruning
       .filter(col("qbucket").between(0, (1 << graft.operators.Similarity.NumPlanes) - 1))
-    // the retrieval join IS the pruning: broadcasting the query batch
-    // against the bucket PARTITION column hands Spark a dynamic
-    // partition-pruning subquery, so the scan reads only the bucket=
-    // directories the queries hash into (plan-asserted:
-    // dynamicpruningexpression in PartitionFilters) — no bucket-id set
-    // ever rides through the driver
-    val candidates = s.read.parquet(path)
-      .select("chunk_uid", "embedding", "bucket")
-    candidates.join(broadcast(q), col("bucket") === col("qbucket"))
+    val store = StoreManifest.read(s, path).select("chunk_uid", "embedding", Partition)
+    // a driver-resident batch is folded into one local relation, which
+    // leaves DPP no build-side filter to key on; its bucket ids are already
+    // computed on the driver, so they prune the scan as a static partition
+    // filter. The set rides as ONE array literal, which generated code
+    // references rather than inlines, so every batch shares one predicate
+    // class (an IN list would compile anew per distinct bucket set). Any
+    // other batch prunes through DPP (plan-asserted in the spec:
+    // dynamicpruningexpression in PartitionFilters).
+    val candidates = q.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        val i = l.output.indexWhere(_.name == "qbucket")
+        store.filter(array_contains(lit(l.data.map(_.getInt(i)).distinct.toArray), col(Partition)))
+      case _ => store
+    }
+    candidates.join(broadcast(q), col(Partition) === col("qbucket"))
       .groupBy("query_id")
       .agg(TopK.topKByScore(V.cosine(col("qemb"), col("embedding")), col("chunk_uid"), k).as("hits"))
       .select(col("query_id"), posexplode(col("hits")).as(Seq("pos", "chunk_uid")))

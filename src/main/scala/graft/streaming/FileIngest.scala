@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StringType
-import graft.sources.Sources
+import graft.sources.{Sources, VectorStoreSink}
 
 /** Continuous file-arrival ingestion: the streaming twin of the batch
   * corpus ingest (customTrainDataController.js uploads files to S3 and
@@ -17,12 +17,13 @@ import graft.sources.Sources
   * corrupt line lands in the quarantine sink, never kills the stream) →
   * valid documents run the map-only chunk → embed → LSH-bucket pipeline
   * (graft.operators.RagPipeline.ingest) → appended to the
-  * bucket-partitioned on-disk vector store (graft.sources.VectorStoreSink
-  * layout, partition-pruned retrieval).
+  * bucket-partitioned on-disk vector store through its own manifest
+  * commit (graft.sources.VectorStoreSink.append, once per micro-batch id),
+  * so streamed and batch-written stores have one read path.
   *
   * Scale notes: every stage is stateless map work, so the stream needs no
   * watermark and no state store; `maxFilesPerTrigger` bounds per-batch
-  * work; the parquet sink appends new files per bucket directory so
+  * work; each batch adds new files per bucket directory so
   * retrieval-side pruning is unaffected by ingestion cadence.
   */
 object FileIngest {
@@ -49,15 +50,15 @@ object FileIngest {
   }
 
   /** Start the continuous index build; returns (index query, quarantine
-    * query). Both are exactly-once via their checkpoints. */
+    * query). Both are exactly-once: the quarantine through its checkpoint,
+    * the store through its checkpoint plus the batch id in its manifest. */
   def start(s: SparkSession, inDir: String, storeDir: String,
       quarantineDir: String, checkpointDir: String): (StreamingQuery, StreamingQuery) = {
     val (ok, bad) = splitQuarantine(readDocumentsStream(s, inDir))
     val index = graft.operators.RagPipeline.ingest(ok)
     val storeQ = index.writeStream
-      .format("parquet").option("path", storeDir)
+      .foreachBatch((batch: DataFrame, id: Long) => VectorStoreSink.append(batch, storeDir, id))
       .option("checkpointLocation", s"$checkpointDir/store")
-      .partitionBy("bucket")
       .outputMode("append").start()
     val quarantineQ = bad.writeStream
       .format("parquet").option("path", quarantineDir)

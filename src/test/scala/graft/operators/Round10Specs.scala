@@ -144,7 +144,7 @@ class DeleteByIdsSpec extends SparkSpec {
       (10L, 1, "d"), (11L, 1, "e"),
       (20L, 2, "f"))
       .toDF("chunk_uid", "bucket", "payload")
-    store.write.mode("overwrite").partitionBy("bucket").parquet(dir)
+    graft.sources.VectorStoreSink.write(store, dir)
     def files(b: Int): Set[String] = {
       val d = new java.io.File(s"$dir/bucket=$b")
       if (!d.exists()) Set.empty
@@ -152,12 +152,16 @@ class DeleteByIdsSpec extends SparkSpec {
     }
     val b1Before = files(1)
     graft.sources.VectorStoreSink.deleteByIds(spark, dir, Seq(1L, 2L, 20L))
-    val left = spark.read.parquet(dir)
+    // no store read returns a deleted id
+    val left = graft.sources.StoreManifest.read(spark, dir)
     assert(left.select("chunk_uid").as[Long].collect().sorted.toSeq == Seq(3L, 10L, 11L))
     // unaffected bucket: identical files, no rewrite
     assert(files(1) == b1Before, "bucket=1 was rewritten but contained no deleted id")
-    // affected bucket rewritten, emptied bucket directory dropped
-    assert(files(0).nonEmpty && files(2).isEmpty)
+    // affected bucket rewritten; the emptied bucket is gone from the
+    // committed snapshot
+    val snap = graft.sources.StoreManifest.snapshot(spark, dir)
+    assert(files(0).nonEmpty && snap.files.map(_.partition).toSet == Set("0", "1"))
+    assert(snap.files.filter(_.partition == "1").map(_.path.stripPrefix("bucket=1/")).toSet == b1Before)
   }
 }
 
