@@ -223,6 +223,7 @@ object Bench {
       }
       sweepCalib += calibrateOnce(spark)
     }
+    System.err.println(s"[bench] local gate routes: ${LocalGate.summary}")
     val results = ordered.map { case (name, _) => (name, samples(name)) }
     def fmt(d: Double): String = if (d < 0) "-1" else d.toString
     val mins = results.map { case (n, ts) => n -> (if (ts.size == 3) ts.min else -1.0) }

@@ -98,29 +98,28 @@ object Graph {
     math.max(1, math.min(s.sparkContext.defaultParallelism * 4,
       (rows / EdgeRowsPerPartition).toInt + 1))
 
-  /** Size gate (normalized pair ROWS) of the broadcast-local graph
-    * kernels — the [[Dedup.connectedComponentsStar]] `ccLocalLabels`
-    * discipline (guide §1.2 step 1) applied to the rest of the family:
-    * below the gate the collected pair sliver (16 bytes/row — 2M rows
-    * ≈ 32 MB, broadcast-sized by definition) runs the whole recurrence
-    * in one driver pass instead of iterations × fixed distributed-stage
-    * overhead (the measured cost shape at bench scale: g1 paid
-    * ~0.4-0.5 s of scheduler round-trips PER STEP for ~10 M long ops
-    * total). Every kernel here is EXACT integer arithmetic — BIGINT
+  /** The broadcast-local graph kernels — the
+    * [[Dedup.connectedComponentsStar]] `ccLocalLabels` discipline (guide
+    * §1.2 step 1) applied to the rest of the family: a pair sliver
+    * (16 bytes/row) under the [[graft.LocalGate]] budget runs the whole
+    * recurrence in one driver pass instead of iterations × fixed
+    * distributed-stage overhead (the measured cost shape at bench scale:
+    * g1 paid ~0.4-0.5 s of scheduler round-trips PER STEP for ~10 M long
+    * ops total). Every kernel here is EXACT integer arithmetic — BIGINT
     * sums, integer DIV, modular checksums, exact counts — so the local
     * replication is order-independent and provably bit-identical to the
     * frame fixed point (GraphLocalEquivalenceSpec pins local ≡ frame on
     * the real corpus and the planted fixtures). A graph above the gate
     * keeps the distributed loops — the only shape that works
-    * corpus-sized; 0 forces them (the spec equivalence fixtures do). */
-  val GraphLocalMaxEdgesKey = "spark.graft.graph.maxLocalEdges"
-  val GraphLocalMaxEdgesDefault: Long = 2000000L
-
-  private def underLocalGate(p: DataFrame, nPairs: Long): Boolean = {
-    val gate = p.sparkSession.conf.get(GraphLocalMaxEdgesKey,
-      GraphLocalMaxEdgesDefault.toString).toLong
-    nPairs > 0 && nPairs <= gate && p.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
+    * corpus-sized. Releases the pair checkpoint when the local path ran. */
+  private def underLocalGate(kernel: String, p: DataFrame, nPairs: Long,
+      eligible: Boolean = true)(local: => DataFrame): Option[DataFrame] = {
+    val out = graft.LocalGate(p.sparkSession, s"graph.$kernel",
+        eligible && nPairs > 0 && p.schema.fields.forall(_.dataType ==
+          org.apache.spark.sql.types.LongType),
+        () => nPairs * graft.LocalGate.PairRowBytes)(_ => Some(local))
+    if (out.isDefined) Checkpoints.release(p)
+    out
   }
 
   /** Collected (p1, p2) pair sliver as dense-indexed endpoint arrays:
@@ -337,12 +336,9 @@ object Graph {
     // count job — Shim.localCheckpointWithCount)
     val (p, nPairs) = org.apache.spark.sql.graftshim.Shim
       .localCheckpointWithCount(normalized)
-    // size-gated broadcast-local recurrence (see [[GraphLocalMaxEdgesKey]])
-    if (underLocalGate(p, nPairs)) {
-      val out = pageRankLocal(p, iterations)
-      Checkpoints.release(p)
-      return out
-    }
+    // size-gated broadcast-local recurrence (see [[underLocalGate]])
+    val local = underLocalGate("pagerank", p, nPairs)(pageRankLocal(p, iterations))
+    if (local.isDefined) return local.get
     val spark = p.sparkSession
     val parts = edgeParts(spark, nPairs * 2L)
     // static frames persist COLUMNAR (compressed in-memory cache): the
@@ -478,16 +474,13 @@ object Graph {
     // (the pageRank partitioning discipline — see EdgeRowsPerPartition)
     val (p, nPairs) = org.apache.spark.sql.graftshim.Shim
       .localCheckpointWithCount(pairs)
-    // size-gated broadcast-local BFS (see [[GraphLocalMaxEdgesKey]]):
-    // the report is exact counts + exact modular checksums — both
+    // size-gated broadcast-local BFS (see [[underLocalGate]]): the
+    // report is exact counts + exact modular checksums — both
     // order-independent, so the local walk is bit-identical. The seed
     // frame must be long-keyed too (the pairs gate can't see it).
-    if (underLocalGate(p, nPairs) && seedNodes.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) {
-      val out = khopLocal(p, seedNodes, hops)
-      Checkpoints.release(p)
-      return out
-    }
+    val local = underLocalGate("khop", p, nPairs, seedNodes.schema.fields.forall(
+      _.dataType == org.apache.spark.sql.types.LongType))(khopLocal(p, seedNodes, hops))
+    if (local.isDefined) return local.get
     val edges = symmetric(p)
       .repartition(edgeParts(p.sparkSession, nPairs * 2L), col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -571,12 +564,9 @@ object Graph {
         .select(least(col("p1"), col("p2")).as("p1"),
           greatest(col("p1"), col("p2")).as("p2"))
         .distinct())
-    // size-gated broadcast-local census (see [[GraphLocalMaxEdgesKey]])
-    if (underLocalGate(p, nP)) {
-      val out = triangleStatsLocal(p)
-      Checkpoints.release(p)
-      return out
-    }
+    // size-gated broadcast-local census (see [[underLocalGate]])
+    val local = underLocalGate("triangles", p, nP)(triangleStatsLocal(p))
+    if (local.isDefined) return local.get
     val deg = symmetric(p).groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
     // orient each edge by (deg, node) lexicographic order. The oriented

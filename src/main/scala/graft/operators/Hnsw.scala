@@ -460,7 +460,7 @@ object Hnsw {
     * Returns (qid, rank, neighbor), rank 1..[[K]], unordered. */
   private[operators] def expandTopK(e0: DataFrame, visited: DataFrame): DataFrame = {
     // Routing (r18, the [[deleteLocal]]/[[localWalkVisited]] discipline
-    // applied to the reporter): below [[ReportLocalMaxBytesKey]] the
+    // applied to the reporter): under the [[graft.LocalGate]] budget the
     // top-K + replica re-expansion runs in one driver-side pass over the
     // collected visited/corpus slivers ([[expandTopKLocal]], spec-pinned
     // bit-identical) — OPTIMIZATION_r18.md §10 measured the frame reporter at
@@ -468,39 +468,21 @@ object Hnsw {
     // stages over a 13.5k-row corpus), × 4 concurrent in s24 and once
     // per s21/s22/s23/p11 read. Above the gate the frame pass streams
     // the corpus — the only shape that works corpus-sized.
-    val spark = e0.sparkSession
-    val localMax = spark.conf.get(ReportLocalMaxBytesKey,
-      WalkLocalMaxBytesDefault.toString).toLong
     val lt = org.apache.spark.sql.types.LongType
     val typesOk =
       visited.schema("qid").dataType == lt &&
         visited.schema("node").dataType == lt &&
         visited.schema("sc").dataType == org.apache.spark.sql.types.DoubleType &&
         e0.schema("vec_id").dataType == lt &&
-        isFloatArray(e0.schema("embedding").dataType)
+        Similarity.isFloatArray(e0.schema("embedding").dataType)
     // visited is request-sized (queries × ef × hops); probe it first so
     // a corpus-sized e0 is only counted when visited already fits
-    val payload = Similarity.Dim.toLong * 4L + 36L
-    if (typesOk && localMax > 0 &&
-        visited.count() * 24L <= localMax &&
-        e0.count() * payload <= localMax)
-      expandTopKLocal(e0, visited)
-    else expandTopKFrames(e0, visited)
+    graft.LocalGate(e0.sparkSession, "hnsw.report", typesOk,
+        () => visited.count() * 24L,
+        () => e0.count() * graft.LocalGate.VectorRowBytes)(
+        _ => Some(expandTopKLocal(e0, visited)))
+      .getOrElse(expandTopKFrames(e0, visited))
   }
-
-  /** Size gate (bytes of corpus payload) of the broadcast-local
-    * reporter: below it [[expandTopKLocal]] runs; above it the frame
-    * pass streams the corpus. Default = the walk's broadcast budget
-    * (a corpus under it is smaller than the adjacency the walk already
-    * collects); 0 forces the frame pass (the equivalence spec does). */
-  val ReportLocalMaxBytesKey = "spark.graft.hnsw.report.maxLocalBytes"
-
-  private[operators] def isFloatArray(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
 
   /** Driver-local replication of [[expandTopKFrames]] — bit-identical
     * by construction (HnswReportEquivalenceSpec pins it on the real
@@ -621,22 +603,6 @@ object Hnsw {
     * session accrues no cached generations (one checkpointed visited
     * frame per call is the entire residue, and it is the return
     * value). */
-  /** Size gate of the broadcast-local walk (bytes of estimated
-    * adjacency payload): below it the whole descent + beam runs as ONE
-    * driver-side pass over the collected adjacency
-    * ([[localWalkVisited]]); above it the per-hop frame loop runs
-    * ([[frameVisited]] — the only shape that works when the graph is
-    * corpus-sized). The default is broadcast-join-sized (the same
-    * regime as [[expandTopK]]'s explicit broadcasts): an adjacency
-    * under a few hundred MB is exactly the side a cluster would ship
-    * to every executor anyway, and walking it beside the driver turns
-    * ~90 scheduler round-trips per read into zero. Deployments with a
-    * bigger driver can raise `spark.graft.hnsw.walk.maxLocalBytes`;
-    * setting it to 0 forces the frame walk everywhere (the spec
-    * equivalence fixture does). */
-  val WalkLocalMaxBytesKey = "spark.graft.hnsw.walk.maxLocalBytes"
-  val WalkLocalMaxBytesDefault: Long = 256L << 20
-
   /** Target visited-frame rows per task of the frame walk's per-hop
     * coalesce — the partition count follows (queries × ef × hops), not
     * a constant (the r17 literal `coalesce(16)` serialized the beam
@@ -664,19 +630,18 @@ object Hnsw {
     val spark = adj.sparkSession
     // route by MEASURED adjacency size (one count over the checkpoint —
     // the rows are fixed-width, so rows × payload is exact, not an
-    // estimate): small graphs take the single-pass local walk, corpus-
-    // sized graphs the iterative frame walk. Long-keyed frames only —
+    // estimate): an adjacency under the [[graft.LocalGate]] budget is
+    // broadcast-sized by definition, and walking it beside the driver
+    // turns ~90 scheduler round-trips per read into zero; corpus-sized
+    // graphs take the iterative frame walk. Long-keyed frames only —
     // spec fixtures with other id types keep the frame path.
-    val localMax = spark.conf.get(WalkLocalMaxBytesKey,
-      WalkLocalMaxBytesDefault.toString).toLong
     val longKeyed = Seq("node", "nbr").forall(c =>
         adj.schema(c).dataType == org.apache.spark.sql.types.LongType) &&
       queries.schema("qid").dataType == org.apache.spark.sql.types.LongType
-    val adjBytes = adj.count() * (Similarity.Dim.toLong * 4L + 36L)
-    val out =
-      if (longKeyed && adjBytes <= localMax)
-        localWalkVisited(e0, adj, queries, ef, beamHops)
-      else frameVisited(e0, adj, queries, ef, beamHops)
+    val out = graft.LocalGate(spark, "hnsw.walk", longKeyed,
+        () => adj.count() * graft.LocalGate.VectorRowBytes)(
+        _ => Some(localWalkVisited(e0, adj, queries, ef, beamHops)))
+      .getOrElse(frameVisited(e0, adj, queries, ef, beamHops))
     if (!preOwned) graft.Checkpoints.release(adj)
     out
   }
@@ -733,17 +698,6 @@ object Hnsw {
           new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]())
           .append((r.getLong(2), r.getSeq[Float](3).toArray))
       }
-    // CosineSimilarity.nullSafeEval's exact loop: float inputs widened
-    // per element, double accumulation in index order, zero-norm ⇒ 0.0
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
     // (score desc, id asc) — TopKBuffer.beats / max_by(struct(sc, -node))
     @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
       val c = java.lang.Double.compare(s, s2)
@@ -755,7 +709,7 @@ object Hnsw {
       // layer's fixed point (cap DescentHops) — argmax over the current
       // node ∪ its layer-l neighbors, ties to the lower id
       var bestNode = entryNode
-      var bestSc = cos(qemb, entryEmb)
+      var bestSc = Similarity.cosLocal(qemb, entryEmb)
       var l = MaxLevel
       while (l >= 1) {
         val adjL = byLayer(l)
@@ -764,7 +718,7 @@ object Hnsw {
         while (hop < DescentHops && moved) {
           moved = false
           adjL.get(bestNode).foreach(_.foreach { case (nid, nemb) =>
-            val sc = cos(qemb, nemb)
+            val sc = Similarity.cosLocal(qemb, nemb)
             if (beats(sc, nid, bestSc, bestNode)) {
               bestNode = nid; bestSc = sc; moved = true
             }
@@ -790,7 +744,7 @@ object Hnsw {
         }
         if (cand.isEmpty) exhausted = true
         else {
-          cand.foreach { case (nid, nemb) => visited(nid) = cos(qemb, nemb) }
+          cand.foreach { case (nid, nemb) => visited(nid) = Similarity.cosLocal(qemb, nemb) }
           beam = visited.toArray
             .sortWith((a, b) => beats(a._2, a._1, b._2, b._1))
             .take(ef).map(_._1)
@@ -1214,8 +1168,8 @@ object Hnsw {
     * recall over survivors is what the spec pins.
     *
     * Routing (r18, guide §1.2 step 1 — the [[localWalkVisited]]
-    * discipline applied to the delete): below
-    * [[DeleteLocalMaxBytesKey]] the whole rename→mask→bridge→re-trim
+    * discipline applied to the delete): under the [[graft.LocalGate]]
+    * budget the whole rename→mask→bridge→re-trim
     * pass runs driver-side over the collected slivers
     * ([[deleteLocal]], spec-pinned bit-identical); above it this
     * declarative frame pass stands unchanged — the only shape that
@@ -1226,35 +1180,24 @@ object Hnsw {
   def deleteFromAdjacency(survivors: DataFrame, adj: DataFrame,
       doomed: DataFrame): DataFrame = {
     val spark = adj.sparkSession
-    val localMax = spark.conf.get(DeleteLocalMaxBytesKey,
-      WalkLocalMaxBytesDefault.toString).toLong
     val lt = org.apache.spark.sql.types.LongType
     val typesOk =
       adj.schema("node").dataType == lt && adj.schema("nbr").dataType == lt &&
         adj.schema("layer").dataType == org.apache.spark.sql.types.IntegerType &&
-        isFloatArray(adj.schema("nemb").dataType) &&
+        Similarity.isFloatArray(adj.schema("nemb").dataType) &&
         survivors.schema("vec_id").dataType == lt &&
-        isFloatArray(survivors.schema("embedding").dataType) &&
+        Similarity.isFloatArray(survivors.schema("embedding").dataType) &&
         doomed.schema("vec_id").dataType == lt &&
-        isFloatArray(doomed.schema("embedding").dataType)
-    // fixed-width rows, so rows × payload is exact; the survivor gate is
-    // only probed once the adjacency passed (&& short-circuits — a
-    // corpus-sized graph never pays the survivor scan)
-    val payload = Similarity.Dim.toLong * 4L + 36L
-    if (typesOk && localMax > 0 &&
-        adj.count() * payload <= localMax &&
-        survivors.count() * payload <= localMax)
-      deleteLocal(survivors, adj, doomed)
-    else deleteFrames(survivors, adj, doomed)
+        Similarity.isFloatArray(doomed.schema("embedding").dataType)
+    // fixed-width rows, so rows × payload is exact; the survivors are
+    // only counted once the adjacency fits (a corpus-sized graph never
+    // pays the survivor scan)
+    graft.LocalGate(spark, "hnsw.delete", typesOk,
+        () => adj.count() * graft.LocalGate.VectorRowBytes,
+        () => survivors.count() * graft.LocalGate.VectorRowBytes)(
+        _ => Some(deleteLocal(survivors, adj, doomed)))
+      .getOrElse(deleteFrames(survivors, adj, doomed))
   }
-
-  /** Size gate (bytes of adjacency/survivor payload) of the broadcast-
-    * local delete: below it the rename→mask→bridge→re-trim pass runs in
-    * one driver-side pass over the collected slivers; above it the
-    * declarative frame pass runs. Default = the walk's broadcast budget
-    * (an adjacency under it is broadcast-sized by definition); 0 forces
-    * the frame pass (the equivalence spec does). */
-  val DeleteLocalMaxBytesKey = "spark.graft.hnsw.delete.maxLocalBytes"
 
   /** Driver-local replication of [[deleteFrames]] — bit-identical by
     * construction (HnswDeleteEquivalenceSpec pins it on the real corpus

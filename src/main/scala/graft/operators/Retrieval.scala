@@ -481,7 +481,6 @@ object Retrieval {
 
   private def p4Frame(s: SparkSession, dir: String, fused: DataFrame,
       q: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val cand0 = e.join(broadcast(fused.select(col("doc_id"))), col("vec_id") === col("doc_id"))
@@ -489,47 +488,19 @@ object Retrieval {
       .select(col("doc_id"), V.cosine(col("qemb"), col("embedding")).as("rel"),
         col("embedding").as("cemb"))
     // broadcast-local greedy (Similarity.mmrGreedyLocal — bit-identical
-    // rounds, s12's gate): the candidate sliver is RrfK-bounded (≤10
-    // rows), so the whole unroll is one collect + driver arithmetic
-    // instead of 7 localCheckpoint round-trips over ≤10-row frames
-    val gate = s.conf.get(Similarity.MmrLocalMaxRowsKey,
-      Similarity.MmrLocalMaxRowsDefault.toString).toLong
-    if (gate > 0L && gate <= Int.MaxValue - 1) {
-      val rows = cand0.limit(gate.toInt + 1).collect()
-      if (rows.length <= gate) {
-        val cs = rows.map(r => (0L, r.getLong(0), r.getDouble(1),
-          r.getSeq[Float](2).toArray))
-        return p4Ledger(s, dir,
-          Similarity.mmrGreedyLocal(cs, P4K, Similarity.MmrLambda)
-            .map { case (_, id, rank) => (id, rank) }
-            .toDF("doc_id", "rank").coalesce(1))
-      }
-    }
-    val cand = cand0.localCheckpoint()
-    val pairs = cand.select(col("doc_id").as("a"), col("cemb").as("aemb"))
-      .join(cand.select(col("doc_id").as("b"), col("cemb").as("bemb")),
-        col("a") =!= col("b"))
-      .select(col("a"), col("b"), V.cosine(col("aemb"), col("bemb")).as("sim"))
-      .localCheckpoint()
-    var sel = cand.orderBy(col("rel").desc, col("doc_id").asc).limit(1)
-      .select(col("doc_id"), lit(1).as("rank")).localCheckpoint()
-    for (r <- 2 to P4K) {
-      val selected = sel.select(col("doc_id").as("sid"))
-      val maxSim = pairs.join(selected, col("b") === col("sid"))
-        .groupBy("a").agg(max(col("sim")).as("maxsim"))
-      val pick = cand
-        .join(selected, col("doc_id") === col("sid"), "left_anti")
-        .join(maxSim, col("doc_id") === col("a"))
-        .withColumn("mmr", lit(Similarity.MmrLambda) * col("rel")
-          - lit(1.0 - Similarity.MmrLambda) * col("maxsim"))
-        .orderBy(col("mmr").desc, col("doc_id").asc).limit(1)
-        .select(col("doc_id"), lit(r).as("rank"))
-      sel = sel.unionByName(pick).localCheckpoint()
-    }
-    p4Ledger(s, dir, sel)
+    // rounds): the candidate sliver is RrfK-bounded (≤10 rows — the
+    // fused top-RrfK × a one-row query), so the whole unroll is one
+    // collect + driver arithmetic at any corpus size and needs no size
+    // gate
+    val cs = cand0.collect().map(r => (0L, r.getLong(0), r.getDouble(1),
+      r.getSeq[Float](2).toArray))
+    p4Ledger(s, dir,
+      Similarity.mmrGreedyLocal(cs, P4K, Similarity.MmrLambda)
+        .map { case (_, id, rank) => (id, rank) }
+        .toDF("doc_id", "rank").coalesce(1))
   }
 
-  /** The token-budget ledger tail shared by both MMR paths. */
+  /** The token-budget ledger tail of p4. */
   private def p4Ledger(s: SparkSession, dir: String, sel: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, dir).select(col("doc_id"),

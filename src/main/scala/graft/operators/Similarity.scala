@@ -125,40 +125,33 @@ object Similarity {
     // Routing (r18, the Hnsw broadcast-local discipline applied to the
     // brute-force serving primitive): the frame pass is 3 stages of
     // fixed overhead (broadcast, topk aggregate pair, sort) around ~ms
-    // of scoring work at bench scale — below [[BruteLocalMaxBytesKey]]
-    // the scoring loop runs driver-side over the collected slivers,
-    // bit-identically (BruteTopKEquivalenceSpec; s1/s5/s15 are oracle-
-    // hash-gated on top). Above the gate the frame pass streams the
-    // corpus — the only shape that works corpus-sized.
-    val spark = corpus.sparkSession
-    val localMax = spark.conf.get(BruteLocalMaxBytesKey,
-      BruteLocalMaxBytesDefault.toString).toLong
+    // of scoring work at bench scale — under the [[graft.LocalGate]]
+    // budget the scoring loop runs driver-side over the collected
+    // slivers, bit-identically (s1/s5/s15 are oracle-hash-gated on top).
+    // Above the gate the frame pass streams the corpus — the only shape
+    // that works corpus-sized.
     val lt = org.apache.spark.sql.types.LongType
     val typesOk =
       corpus.schema("vec_id").dataType == lt &&
-        Hnsw.isFloatArray(corpus.schema("embedding").dataType) &&
+        isFloatArray(corpus.schema("embedding").dataType) &&
         queries.schema("qid").dataType == lt &&
-        Hnsw.isFloatArray(queries.schema("qemb").dataType)
-    val payload = Dim.toLong * 4L + 36L
-    val local =
-      if (typesOk && localMax > 0 &&
-          queries.count() * payload <= localMax &&
-          corpus.count() * payload <= localMax)
-        bruteTopKLocal(corpus, queries, k, excludeSelf)
-      else None
-    local.getOrElse {
-      val joined =
-        if (excludeSelf) corpus.join(broadcast(queries), col("vec_id") =!= col("qid"))
-        else corpus.crossJoin(broadcast(queries))
-      explodeRanks(joined.groupBy("qid")
-        .agg(TopK.topKByScore(V.cosine(col("qemb"), col("embedding")), col("vec_id"), k).as("nbrs")))
-    }
+        isFloatArray(queries.schema("qemb").dataType)
+    graft.LocalGate(corpus.sparkSession, "brute", typesOk,
+        () => queries.count() * graft.LocalGate.VectorRowBytes,
+        () => corpus.count() * graft.LocalGate.VectorRowBytes)(
+        _ => bruteTopKLocal(corpus, queries, k, excludeSelf))
+      .getOrElse {
+        val joined =
+          if (excludeSelf) corpus.join(broadcast(queries), col("vec_id") =!= col("qid"))
+          else corpus.crossJoin(broadcast(queries))
+        explodeRanks(joined.groupBy("qid")
+          .agg(TopK.topKByScore(V.cosine(col("qemb"), col("embedding")), col("vec_id"), k).as("nbrs")))
+      }
   }
 
-  /** Size gate (bytes of corpus payload) of the broadcast-local brute
-    * top-k; 0 forces the frame pass (the equivalence spec does). */
-  val BruteLocalMaxBytesKey = "spark.graft.brute.maxLocalBytes"
-  val BruteLocalMaxBytesDefault: Long = 256L << 20
+  private[graft] def isFloatArray(dt: org.apache.spark.sql.types.DataType): Boolean =
+    PartialFunction.cond(dt) { case org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.FloatType, _) => true }
 
   /** Driver-local replication of the frame brute top-k — bit-identical
     * by construction: [[cosLocal]] is the codegen'd CosineSimilarity's
@@ -1741,23 +1734,10 @@ object Similarity {
     s12MmrFrame(Tables.embeddings(s, dir).select("vec_id", "embedding"),
       queries, excludeSelf = false)
 
-  /** Size gate (candidate ROWS) of the broadcast-local MMR greedy:
-    * below it the (queries × shortlist) candidate sliver is collected
-    * once and the whole greedy unroll runs driver-side — the HNSW/CC/PQ
-    * broadcast-local discipline applied to the re-rank, whose frame
-    * unroll is DRIVER-ACTION-bound (7 localCheckpoints over ≤200-row
-    * slivers: cand, pairs, sel1, 4 rounds). The sliver is
-    * request-bounded BY CONSTRUCTION (queries × MmrShortlist — a
-    * serving tier runs MMR in memory on exactly this sliver); a
-    * million-query batch above the gate keeps the frame unroll.
-    * 0 forces the frames (spec equivalence fixtures). */
-  val MmrLocalMaxRowsKey = "spark.graft.mmr.maxLocalRows"
-  val MmrLocalMaxRowsDefault: Long = 100000L
-
-  /** CosineSimilarity.nullSafeEval's exact loop (the localWalkVisited
-    * replication): float inputs widened per element, double
-    * accumulation in index order, zero-norm ⇒ 0.0. */
-  private[operators] def cosLocal(a: Array[Float], b: Array[Float]): Double = {
+  /** CosineSimilarity.nullSafeEval's exact loop — the one driver-side
+    * cosine of every local path: float inputs widened per element,
+    * double accumulation in index order, zero-norm ⇒ 0.0. */
+  private[graft] def cosLocal(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
@@ -1832,23 +1812,27 @@ object Similarity {
       .join(broadcast(shortIds), Seq("cand_id"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid"), col("cand_id"), V.cosine(col("qemb"), col("cemb")).as("rel"), col("cemb"))
-    // broadcast-local greedy below the gate: one CollectLimit job doubles
-    // as the gate test (the PQ-train pattern); rel comes from the frame's
-    // own codegen'd cosine, pairwise sims from the identical local loop
-    val gate = spark.conf.get(MmrLocalMaxRowsKey,
-      MmrLocalMaxRowsDefault.toString).toLong
-    if (gate > 0L && gate <= Int.MaxValue - 1) {
-      val rows = cand0.limit(gate.toInt + 1).collect()
-      if (rows.length <= gate) {
+    // broadcast-local greedy under the [[graft.LocalGate]] budget (the
+    // sliver is queries × MmrShortlist rows): one CollectLimit job sized
+    // by the reservation doubles as the gate test; rel comes from the
+    // frame's own codegen'd cosine, pairwise sims from the identical
+    // local loop
+    val local = graft.LocalGate(spark, "mmr", eligible = true) { grant =>
+      val n = grant.rows(graft.LocalGate.VectorRowBytes)
+      val rows = cand0.limit(n + 1).collect()
+      if (rows.length > n) None
+      else {
+        grant.keep(rows.length * graft.LocalGate.VectorRowBytes)
         val cs = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getSeq[Float](3).toArray))
-        return mmrGreedyLocal(cs, MmrK, MmrLambda)
+        Some(mmrGreedyLocal(cs, MmrK, MmrLambda)
           .toDF("qid", "neighbor", "rank")
           .coalesce(1)
           .select(col("qid"), col("rank"), col("neighbor"))
-          .orderBy("qid", "rank")
+          .orderBy("qid", "rank"))
       }
     }
+    if (local.isDefined) return local.get
     val cand = cand0.localCheckpoint()
     val pairs = cand.select(col("qid"), col("cand_id").as("a"), col("cemb").as("aemb"))
       .join(cand.select(col("qid"), col("cand_id").as("b"), col("cemb").as("bemb")), Seq("qid"))

@@ -86,12 +86,18 @@ object PqCodebook {
     * driver loop-control actions; callers materialize (localCheckpoint)
     * the tiny result before fanning out. */
   def trainMany(e: DataFrame, ks: Seq[Int], iters: Int = Iters,
-      m: Int = M, sub: Int = Sub): DataFrame =
-    trainManyLocal(e, ks, iters, m, sub)
+      m: Int = M, sub: Int = Sub): DataFrame = {
+    val fields = e.schema.fields
+    val shapeOk = fields.length == 2 &&
+      fields(0).dataType == org.apache.spark.sql.types.LongType &&
+      graft.operators.Similarity.isFloatArray(fields(1).dataType)
+    graft.LocalGate(e.sparkSession, "pq.train", shapeOk)(
+        trainManyLocal(e, _, ks, iters, m, sub))
       .getOrElse(trainManyFrames(e, ks, iters, m, sub))
+  }
 
-  /** Size gate (corpus ROWS) of the broadcast-local Lloyd: below it the
-    * training corpus is collected once and every iteration runs as a
+  /** Driver-side Lloyd: a training corpus under the [[graft.LocalGate]]
+    * budget is collected once and every iteration runs as a
     * driver-side loop over the identical fixed-point arithmetic — the
     * HNSW/CC broadcast-local discipline (guide §1.2 step 1) applied to
     * PQ training, whose distributed form is STAGE-overhead-bound
@@ -102,37 +108,24 @@ object PqCodebook {
     * training SAMPLE (FAISS's train() collects the sample to one
     * machine), never as a distributed loop over the full corpus; a
     * corpus above the gate keeps the shared-dataflow distributed form.
-    * 0 forces the frame path (spec equivalence fixtures). */
-  val TrainLocalMaxRowsKey = "spark.graft.pq.train.maxLocalRows"
-  val TrainLocalMaxRowsDefault: Long = 100000L
-
-  /** Driver-side Lloyd over a collected corpus sliver — bit-identical
-    * to [[trainManyFrames]] (same micro quantization, same argmin
-    * tie-break to the lowest codeword, exact long sums, the same
+    *
+    * Bit-identical to [[trainManyFrames]] (same micro quantization, same
+    * argmin tie-break to the lowest codeword, exact long sums, the same
     * floor(double-divide) centroid update, empty clusters keep their
     * codeword; sums/counts are order-independent so the collected row
-    * order is immaterial). None above the gate, on a non-(vec_id,
-    * embedding) frame, on a ragged corpus, or when any init vector
-    * vec_id < max(ks) is missing — callers fall back to the frames. */
-  private def trainManyLocal(e: DataFrame, ks: Seq[Int], iters: Int,
-      m: Int, sub: Int): Option[DataFrame] = {
+    * order is immaterial). None above the reservation, on a ragged
+    * corpus, or when any init vector vec_id < max(ks) is missing —
+    * callers fall back to the frames. */
+  private def trainManyLocal(e: DataFrame, grant: graft.LocalGate.Grant,
+      ks: Seq[Int], iters: Int, m: Int, sub: Int): Option[DataFrame] = {
     val spark = e.sparkSession
-    val gate = spark.conf.get(TrainLocalMaxRowsKey,
-      TrainLocalMaxRowsDefault.toString).toLong
-    if (gate <= 0L || gate > Int.MaxValue - 1) return None
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    val fields = e.schema.fields
-    val shapeOk = fields.length == 2 && fields(0).dataType == LongType &&
-      (fields(1).dataType match {
-        case ArrayType(FloatType, _) => true
-        case _ => false
-      })
-    if (!shapeOk) return None
-    // one CollectLimit job doubles as the gate test: gate+1 rows back
-    // means the corpus is above the gate (the scan short-circuits at
-    // scale — no full count needed)
-    val rows = e.limit(gate.toInt + 1).collect()
-    if (rows.length > gate) return None
+    // one CollectLimit job sized by the reservation doubles as the gate
+    // test: n+1 rows back means the corpus is above it (the scan
+    // short-circuits at scale — no full count needed)
+    val cap = grant.rows(graft.LocalGate.VectorRowBytes)
+    val rows = e.limit(cap + 1).collect()
+    if (rows.length > cap) return None
+    grant.keep(rows.length * graft.LocalGate.VectorRowBytes)
     val dim = m * sub
     val n = rows.length
     val vecs = Array.newBuilder[Array[Long]]

@@ -36,6 +36,7 @@ object VectorStoreMaintenance {
       reassignPpm: Long, retrained: Boolean)
 
   private def genPath(root: String, g: Int) = s"$root/gen_$g"
+  private val GenDir = "^gen_(\\d+)$".r
 
   /** The live generation: the highest `gen_<n>` with a committed manifest
     * (-1 for an empty/absent root). Listed through Hadoop's FileSystem
@@ -49,10 +50,20 @@ object VectorStoreMaintenance {
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) -1
     else fs.listStatus(path)
-      .flatMap(st => "^gen_(\\d+)$".r.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt))
+      .flatMap(st => GenDir.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt))
       .sorted(Ordering[Int].reverse)
       .find(g => StoreManifest.latest(s, genPath(root, g)).isDefined)
       .getOrElse(-1)
+  }
+
+  /** Delete every `gen_<h>` with h < g (committed or not). */
+  private def retireBelow(s: SparkSession, root: String, g: Int): Unit = {
+    val path = new org.apache.hadoop.fs.Path(root)
+    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.listStatus(path).foreach { st =>
+      GenDir.findFirstMatchIn(st.getPath.getName)
+        .filter(_.group(1).toInt < g).foreach(_ => fs.delete(st.getPath, true))
+    }
   }
 
   private def codebookOf(snap: StoreSnapshot, at: String): Array[Array[Float]] =
@@ -67,16 +78,6 @@ object VectorStoreMaintenance {
   def init(embeddings: DataFrame, k: Int, root: String, seed: Long = 42L): Unit =
     IvfIndex.build(embeddings, IvfIndex.train(embeddings, k, seed), genPath(root, 0))
 
-  private def cosine(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-  }
-
   /** Reorder `candidate` so its index i holds the centroid best matching
     * stored centroid i — greedy on descending cosine over the k×k pairs
     * (k is codebook-sized; this is driver-side sliver work). */
@@ -84,7 +85,7 @@ object VectorStoreMaintenance {
       candidate: Array[Array[Float]]): Array[Array[Float]] = {
     val pairs = for {
       i <- stored.indices; j <- candidate.indices
-    } yield (cosine(stored(i), candidate(j)), i, j)
+    } yield (graft.operators.Similarity.cosLocal(stored(i), candidate(j)), i, j)
     val out = new Array[Array[Float]](stored.length)
     val usedS = new Array[Boolean](stored.length)
     val usedC = new Array[Boolean](candidate.length)
@@ -97,7 +98,10 @@ object VectorStoreMaintenance {
   /** One maintenance cycle: append the batch into the current
     * generation, retrain a candidate codebook on the grown store, align
     * it, measure staleness, and rebuild as generation g+1 when the
-    * reassignment rate crosses `thresholdPpm`. */
+    * reassignment rate crosses `thresholdPpm`. A committed rebuild
+    * retires every generation below g — StoreManifest's file retention
+    * applied to generations: a reader that resolved gen_g keeps its
+    * snapshot until the next rebuild. */
   def absorb(s: SparkSession, batch: DataFrame, root: String,
       thresholdPpm: Long, seed: Long = 42L): MaintenanceReport = {
     val g = currentGen(s, root)
@@ -111,7 +115,10 @@ object VectorStoreMaintenance {
     val st = IvfIndex.staleness(s, genPath(root, g), candidate).collect()(0)
     val (n, ppm) = (st.getLong(0), st.getLong(2))
     val retrain = ppm > thresholdPpm
-    if (retrain) IvfIndex.build(store, candidate, genPath(root, g + 1))
+    if (retrain) {
+      IvfIndex.build(store, candidate, genPath(root, g + 1))
+      retireBelow(s, root, g)
+    }
     MaintenanceReport(if (retrain) g + 1 else g, n, ppm, retrain)
   }
 

@@ -21,10 +21,10 @@ class HnswCollapseSpec extends SparkSpec {
   import spark.implicits._
 
   /** Planted dense-cluster corpus: 200 base vectors (the sf corpus), 50
-    * near-tie members each — member j perturbs dim 0 by j·0.002 (the
-    * HnswScaleProbe --perturb recipe: colinear chains, every member
-    * DISTINCT, all within-family cosines ≫ the 0.99 collapse threshold,
-    * nothing organic across families). 10 000 rows >
+    * near-tie members each — member j perturbs dim 0 by j·0.002, so each
+    * family is a colinear chain with every member DISTINCT (a replica
+    * family made full-cardinality), all within-family cosines ≫ the
+    * 0.99 collapse threshold, nothing organic across families. 10 000 rows >
     * CollapseExactThreshold, so the collapse runs its bucketed iterate
     * rounds AND the exact finishing pass — the full registered scale
     * machinery. */
@@ -68,9 +68,10 @@ class HnswCollapseSpec extends SparkSpec {
     val corpus = clustered.localCheckpoint()
     val qs = Similarity.externalQueries(spark, sfDir).localCheckpoint()
     val got = Hnsw.collapseServe(corpus, qs)
-    // tie-robust recall (the HnswScaleProbe discipline): a served id is
-    // a hit iff its TRUE cosine clears the query's K-th brute-force
-    // cosine — near-tie members are interchangeable by construction
+    // tie-robust recall: a served id is a hit iff its TRUE cosine clears
+    // the query's K-th brute-force cosine (minus 1e-9), so id mismatches
+    // among equal- or near-equal-scoring members are not misses —
+    // near-tie members are interchangeable by construction
     val cos = graft.functions.VectorExpressions.cosine _
     val nemb = corpus.select(col("vec_id").as("neighbor"), col("embedding").as("nemb"))
     val gotScored = got.join(nemb, Seq("neighbor")).join(qs, Seq("qid"))

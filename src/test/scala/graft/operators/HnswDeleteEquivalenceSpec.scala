@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{LocalGateHarness, SparkSpec}
 
 /** r18: the broadcast-local delete ([[Hnsw.deleteLocal]]) must be
   * BIT-IDENTICAL to the declarative frame pass it short-circuits — the
@@ -12,7 +12,7 @@ import graft.SparkSpec
   * the re-canonicalize step), plus the registered s23 rows across both
   * paths. Any drift in either implementation fails loudly (s23 and the
   * s23FromPersisted twin both route through this delete). */
-class HnswDeleteEquivalenceSpec extends SparkSpec {
+class HnswDeleteEquivalenceSpec extends SparkSpec with LocalGateHarness {
   import spark.implicits._
 
   private lazy val e = graft.Tables.embeddings(spark, sfDir)
@@ -28,20 +28,13 @@ class HnswDeleteEquivalenceSpec extends SparkSpec {
         else r.getSeq[Float](3).map(java.lang.Float.floatToRawIntBits)))
       .sortBy(t => (t._1, t._2, t._3))
 
-  private def withGate[A](maxLocal: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Hnsw.DeleteLocalMaxBytesKey)
-    spark.conf.set(Hnsw.DeleteLocalMaxBytesKey, maxLocal)
-    try body
-    finally prev.fold(spark.conf.unset(Hnsw.DeleteLocalMaxBytesKey))(
-      v => spark.conf.set(Hnsw.DeleteLocalMaxBytesKey, v))
-  }
-
-  private def deleted(corpus: DataFrame, doomIds: Seq[Long],
-      maxLocal: String): Vector[(Int, Long, Long, Seq[Int])] = {
+  /** (frame, local) surviving adjacency after deleting `doomIds`. */
+  private def deleted(corpus: DataFrame, doomIds: Seq[Long])
+      : (Vector[(Int, Long, Long, Seq[Int])], Vector[(Int, Long, Long, Seq[Int])]) = {
     val doom = corpus.filter(col("vec_id").isin(doomIds: _*))
     val surv = corpus.filter(!col("vec_id").isin(doomIds: _*))
     val adj = Hnsw.buildAdjacency(corpus).localCheckpoint()
-    val out = withGate(maxLocal) {
+    val out = framesAndLocal("hnsw.delete") {
       rowsOf(Hnsw.deleteFromAdjacency(surv, adj, doom))
     }
     graft.Checkpoints.release(adj)
@@ -49,8 +42,7 @@ class HnswDeleteEquivalenceSpec extends SparkSpec {
   }
 
   test("local delete ≡ frame delete on the real corpus (registered doomed set)") {
-    val local = deleted(e, Hnsw.deleteIds, (1L << 30).toString)
-    val frame = deleted(e, Hnsw.deleteIds, "0")
+    val (frame, local) = deleted(e, Hnsw.deleteIds)
     assert(local.nonEmpty)
     assert(local == frame,
       s"paths diverged: onlyLocal=${(local.toSet -- frame.toSet).take(3)} " +
@@ -65,17 +57,16 @@ class HnswDeleteEquivalenceSpec extends SparkSpec {
       .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
     val corpus = e.unionByName(replicas)
     val doomIds = Seq(0L, 1L, 20L, 40L)
-    val local = deleted(corpus, doomIds, (1L << 30).toString)
-    val frame = deleted(corpus, doomIds, "0")
+    val (frame, local) = deleted(corpus, doomIds)
     assert(local.nonEmpty)
     assert(local == frame)
   }
 
   test("registered s23 rows identical across delete paths") {
-    def rows(maxLocal: String): Seq[(Long, Int, Long)] = withGate(maxLocal) {
+    val (frame, local) = framesAndLocal("hnsw.delete", "hnsw.walk", "hnsw.report") {
       Hnsw.s23HnswDelete(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     }
-    assert(rows((1L << 30).toString) == rows("0"))
+    assert(local == frame)
   }
 }

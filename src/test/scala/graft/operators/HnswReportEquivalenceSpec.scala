@@ -1,40 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{LocalGateHarness, SparkSpec}
 
 /** r18: the broadcast-local reporter ([[Hnsw.expandTopKLocal]]) must be
   * BIT-IDENTICAL to the declarative frame reporter it short-circuits —
-  * same (qid, rank, neighbor) set on the real corpus (through the
-  * registered s21 read and the s24 curve) and on the duplicate-embedding
-  * fixture that exercises the (qid, cemb) dedup. Any drift in either
-  * implementation fails loudly (s21/s22/s23/p11 reads and the s24 curve
-  * all report through this path). */
-class HnswReportEquivalenceSpec extends SparkSpec {
+  * same (qid, rank, neighbor) set on the real corpus (through the s24
+  * curve; the registered s21 read is pinned in HnswWalkEquivalenceSpec)
+  * and on the duplicate-embedding fixture that exercises the (qid, cemb)
+  * dedup. Any drift in either implementation fails loudly
+  * (s21/s22/s23/p11 reads and the s24 curve all report through this
+  * path). */
+class HnswReportEquivalenceSpec extends SparkSpec with LocalGateHarness {
   import spark.implicits._
 
-  private def withGate[A](maxLocal: String)(body: => A): A = {
-    val prev = spark.conf.getOption(Hnsw.ReportLocalMaxBytesKey)
-    spark.conf.set(Hnsw.ReportLocalMaxBytesKey, maxLocal)
-    try body
-    finally prev.fold(spark.conf.unset(Hnsw.ReportLocalMaxBytesKey))(
-      v => spark.conf.set(Hnsw.ReportLocalMaxBytesKey, v))
-  }
-
-  test("local reporter ≡ frame reporter: registered s21 rows across paths") {
-    def rows(maxLocal: String): Seq[(Long, Int, Long)] = withGate(maxLocal) {
-      Hnsw.s21HnswTopK(spark, sfDir).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    }
-    assert(rows((1L << 30).toString) == rows("0"))
-  }
-
   test("local reporter ≡ frame reporter: s24 curve rows across paths") {
-    def rows(maxLocal: String): Seq[(Int, Int, Double, Double)] = withGate(maxLocal) {
+    val (frame, local) = framesAndLocal("hnsw.walk", "hnsw.report", "brute") {
       Hnsw.s24HnswTuning(spark, sfDir).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3))).toSeq
     }
-    assert(rows((1L << 30).toString) == rows("0"))
+    assert(local == frame)
   }
 
   test("local reporter ≡ frame reporter on the duplicate-embedding fixture") {
@@ -49,12 +33,10 @@ class HnswReportEquivalenceSpec extends SparkSpec {
       (7L, 1L, 0.9), (7L, 2L, 0.9), (7L, 3L, 0.5), (7L, 5L, 0.7),
       (7L, 6L, -0.3), (7L, 7L, -0.9),
       (8L, 3L, 0.4)).toDF("qid", "node", "sc")
-    def rows(maxLocal: String): Set[(Long, Int, Long)] = withGate(maxLocal) {
+    val (frame, local) = framesAndLocal("hnsw.report") {
       Hnsw.expandTopK(e0, visited).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     }
-    val local = rows((1L << 30).toString)
-    val frame = rows("0")
     assert(local == frame, s"onlyLocal=${local -- frame} onlyFrame=${frame -- local}")
     assert(local.nonEmpty)
   }

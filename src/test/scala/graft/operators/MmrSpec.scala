@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{LocalGateHarness, SparkSpec}
 import org.apache.spark.sql.functions.col
 
 /** s12 MMR re-rank: the full greedy selection recomputed driver-side
   * from the Carbonell-Goldstein definition, plus structural invariants. */
-class MmrSpec extends SparkSpec {
+class MmrSpec extends SparkSpec with LocalGateHarness {
   import spark.implicits._
 
   private def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -54,12 +54,10 @@ class MmrSpec extends SparkSpec {
   }
 
   test("s12 broadcast-local greedy equals the frame unroll (forced via the gate)") {
-    def run(): Seq[(Long, Int, Long)] =
+    val (viaFrames, viaLocal) = framesAndLocal("mmr") {
       Similarity.s12MmrRerank(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val viaLocal = run() // default gate: sliver-sized, routes local
-    spark.conf.set(Similarity.MmrLocalMaxRowsKey, "0")
-    val viaFrames = try run() finally spark.conf.unset(Similarity.MmrLocalMaxRowsKey)
+    }
     assert(viaLocal == viaFrames)
   }
 

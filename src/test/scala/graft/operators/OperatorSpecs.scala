@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{LocalGateHarness, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class RelationalSpec extends SparkSpec {
@@ -37,7 +37,7 @@ class RelationalSpec extends SparkSpec {
   }
 }
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with LocalGateHarness {
   import graft.functions.{VectorExpressions => V}
 
   test("s1 ranks agree with a window-function reference plan") {
@@ -200,15 +200,11 @@ class SimilaritySpec extends SparkSpec {
   test("broadcast-local Lloyd equals the distributed training frames (full grid)") {
     import graft.sources.PqCodebook
     val e = graft.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    def cb(localGate: String): Seq[(Int, Int, Int, Seq[Long])] = {
-      spark.conf.set(PqCodebook.TrainLocalMaxRowsKey, localGate)
-      try PqCodebook.trainMany(e, Similarity.PqKs).collect()
+    val (viaFrames, viaLocal) = framesAndLocal("pq.train") {
+      PqCodebook.trainMany(e, Similarity.PqKs).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getSeq[Long](3)))
         .toSeq.sortBy(t => (t._1, t._2, t._3))
-      finally spark.conf.unset(PqCodebook.TrainLocalMaxRowsKey)
     }
-    val viaLocal = cb(PqCodebook.TrainLocalMaxRowsDefault.toString)
-    val viaFrames = cb("0") // 0 forces the distributed path
     assert(viaLocal == viaFrames,
       "local Lloyd diverges from the distributed training frames")
     assert(viaLocal.nonEmpty)
@@ -292,15 +288,11 @@ class SimilaritySpec extends SparkSpec {
     // collects the SAME filtered scan (the pushdown fires at collect
     // time), but its final plan roots at a local relation and no longer
     // displays the scan node.
-    val prev = spark.conf.getOption(Similarity.BruteLocalMaxBytesKey)
-    spark.conf.set(Similarity.BruteLocalMaxBytesKey, "0")
-    try {
-      val plan = Similarity.s5FilteredTopK(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("In(label, [1,2,3])"),
-        s"label filter not pushed into the scan:\n$plan")
-    } finally prev.fold(spark.conf.unset(Similarity.BruteLocalMaxBytesKey))(
-      v => spark.conf.set(Similarity.BruteLocalMaxBytesKey, v))
+    val plan = withBudget(0L) {
+      Similarity.s5FilteredTopK(spark, sfDir).queryExecution.executedPlan.toString
+    }
+    assert(plan.contains("In(label, [1,2,3])"),
+      s"label filter not pushed into the scan:\n$plan")
   }
 
   test("v3 index stats partition the store exactly (counts, dim, checksum)") {

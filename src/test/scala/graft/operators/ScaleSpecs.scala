@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{LocalGateHarness, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class SkewSpec extends SparkSpec {
@@ -24,27 +24,18 @@ class SkewSpec extends SparkSpec {
   }
 }
 
-class StarComponentsSpec extends SparkSpec {
+class StarComponentsSpec extends SparkSpec with LocalGateHarness {
   import spark.implicits._
-
-  /** Evaluate `f` with the broadcast-local CC path disabled, so the
-    * DISTRIBUTED loops are what the equivalence pins exercise. */
-  private def forcedFrame[A](f: => A): A = {
-    spark.conf.set(Dedup.CcLocalMaxEdgesKey, "0")
-    try f finally spark.conf.unset(Dedup.CcLocalMaxEdgesKey)
-  }
 
   test("local, large-star/small-star and min-propagation labels all match on the d2 graph") {
     val edges = Dedup.d2NgramJaccard(spark, sfDir)
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
     def run(cc: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      cc(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = forcedFrame(run(Dedup.connectedComponents))
-    val viaStar = forcedFrame(run(Dedup.connectedComponentsStar))
-    // default gate: sliver-sized graph routes to the driver-side
-    // union-find — must land on the identical fixed point
-    val viaLocal = run(Dedup.connectedComponentsStar)
-    val viaLocalProp = run(Dedup.connectedComponents)
+      framesAndLocal("cc")(cc(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val (viaProp, viaLocalProp) = run(Dedup.connectedComponents)
+    val (viaStar, viaLocal) = run(Dedup.connectedComponentsStar)
+    // a sliver-sized graph routes to the driver-side union-find — must
+    // land on the identical fixed point
     assert(viaStar == viaProp)
     assert(viaLocal == viaProp)
     assert(viaLocalProp == viaProp)
@@ -61,12 +52,10 @@ class StarComponentsSpec extends SparkSpec {
         val v = rnd.nextInt(24).toLong
         (math.min(u, v), math.max(u, v) + 1) // +1 avoids self-loops
       }.toDF("u", "v")
-      val viaProp = forcedFrame(Dedup.connectedComponents(edges)
+      val viaProp = withBudget(0L)(Dedup.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      val viaStar = forcedFrame(Dedup.connectedComponentsStar(edges)
+      val (viaStar, viaLocal) = framesAndLocal("cc")(Dedup.connectedComponentsStar(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      val viaLocal = Dedup.connectedComponentsStar(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaStar == viaProp, s"divergence on edges ${edges.collect().toSeq}")
       assert(viaLocal == viaProp, s"local divergence on edges ${edges.collect().toSeq}")
     }
@@ -76,10 +65,9 @@ class StarComponentsSpec extends SparkSpec {
     // path 0-1-2-...-199: min-propagation moves the 0 label one hop per
     // round (199 rounds); the alternating star algorithm needs O(log n)
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("u", "v")
-    val labels = forcedFrame(Dedup.connectedComponentsStar(edges).collect())
+    val (labels, local) = framesAndLocal("cc")(Dedup.connectedComponentsStar(edges).collect())
     assert(labels.length == 200)
     assert(labels.forall(_.getLong(1) == 0L), "path did not collapse to component 0")
-    val local = Dedup.connectedComponentsStar(edges).collect()
     assert(local.length == 200 && local.forall(_.getLong(1) == 0L))
   }
 }

@@ -187,6 +187,9 @@ class StoreManifestSpec extends SparkSpec {
     assert(faults.isEmpty, faults.asScala.mkString("\n"))
     assert(reads.get() >= 4, s"only ${reads.get()} reads overlapped the writes")
     assert(VectorStoreMaintenance.currentGen(spark, root) == doomed.size)
+    // each rebuild retires the generations below the one it superseded
+    val gens = new File(root).listFiles().map(_.getName).filter(_.startsWith("gen_")).sorted.toSeq
+    assert(gens == Seq(s"gen_${doomed.size - 1}", s"gen_${doomed.size}"))
     assert((ids(StoreManifest.read(spark, lsh), "chunk_uid") & deleted.get()).isEmpty)
   }
 }
