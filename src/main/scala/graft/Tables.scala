@@ -1,6 +1,14 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Column-pruned parquet loaders for the driver-generated test tables.
   *
@@ -11,59 +19,64 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
-  /** Widen a fact/corpus scan whose file layout cannot feed every core.
-    *
-    * Spark parallelizes a parquet scan by byte-range splits, but a split
-    * only does work if a row group STARTS inside it — a table shipped as
-    * one file with one row group runs its entire map stage (regex
-    * tokenization, n-gram explodes, per-row scoring) on ONE task no
-    * matter how many cores the session has. That is precisely the local
-    * test-data shape (the round-9 regenerated tables are one row group
-    * each), and it is invisible to the machine-epoch calibration, which
-    * measures core throughput on `spark.range`, not scan splits.
-    *
-    * When `spark.graft.scan.widen=true` and the BYTE-estimated split
-    * count is below the session's core count, a round-robin repartition
-    * (cheap by construction: the table is at most
-    * cores×maxPartitionBytes ≈ small) restores map-stage parallelism.
-    * At production scale the estimate exceeds the core count and this
-    * is the identity — no shuffle is ever added to a 100 TB scan.
-    * Filters and column pruning push through Repartition, so
-    * `PushedFilters`/`ReadSchema` are unaffected.
-    *
-    * OFF by default, deliberately: the knob pays one extra stage +
-    * exchange per scan, which is the right trade only when the
-    * per-split map work is large (minutes of regex/scoring behind one
-    * task). Measured at the sf0.1 bench scale it is a net LOSS — those
-    * queries are fixed-overhead dominated (sub-second), so widening
-    * every scan added ~0.3-0.9 s/query while recovering less. Turn it
-    * on for deployments whose file layout genuinely starves cores
-    * (e.g. a few huge heavily-compressed files).
-    * Known limit: a HUGE single-row-group file defeats the byte
-    * estimate; that is a data-layout bug to fix at the writer. */
-  private def widened(s: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val enabled = s.conf.get("spark.graft.scan.widen", "false").toBoolean
-    if (!enabled) df
-    else {
-      val cores = s.sparkContext.defaultParallelism
-      val bytes =
-        try {
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(p).getLength
-        } catch { case _: Throwable => Long.MaxValue }
-      val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-      val estSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-      if (estSplits < cores) df.repartition(cores) else df
+  /** Every engine parquet read goes through here. A bare
+    * `spark.read.parquet` runs one Spark job per call only to read a
+    * footer (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`), even
+    * for a single file; at interactive sizes that job is a large share of
+    * a read. This reads the same footer on the driver instead and hands
+    * Spark the schema, so the scan plans with no job, and `.schema` of the
+    * result is exactly what Spark's own read resolves to. Layouts it does
+    * not recognise fall back to Spark's own inference (see
+    * [[footerSchema]]). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths).fold(spark.read)(spark.read.schema).parquet(paths: _*)
+
+  /** The schema Spark's inference would take, read from the one footer it
+    * would touch with `mergeSchema` off: `_common_metadata`, else
+    * `_metadata`, else the first data file in path order, after skipping
+    * `_`/`.` names as Spark's listing does. Spark's own converter turns it
+    * into a `StructType` under the session's settings (`binaryAsString`,
+    * `int96AsTimestamp`, `inferTimestampNTZ`, `nanosAsLong`), as inference
+    * does. None (Spark's own read) for a missing path (a glob is one), no
+    * data file, partition subdirectories, or schema merging. */
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val leaves = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      val status = try fs.getFileStatus(path) catch { case _: FileNotFoundException => return None }
+      if (status.isFile) Seq(status)
+      else fs.listStatus(path).toSeq.filterNot(f => hiddenName(f.getPath.getName))
     }
+    if (leaves.exists(_.isDirectory)) return None
+    val sorted = leaves.sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => sorted.find(_.getPath.getName == n)).headOption
+      .orElse(sorted.find(f => !summaries.contains(f.getPath.getName)))
+      .map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong))
+      }
   }
 
-  private def loadWide(s: SparkSession, dir: String, name: String): DataFrame =
-    widened(s, load(s, dir, name), s"$dir/$name.parquet")
+  /** Spark's listing filter (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
 
-  def lineitem(s: SparkSession, dir: String): DataFrame  = loadWide(s, dir, "lineitem")
-  def orders(s: SparkSession, dir: String): DataFrame    = loadWide(s, dir, "orders")
+  def lineitem(s: SparkSession, dir: String): DataFrame  = load(s, dir, "lineitem")
+  def orders(s: SparkSession, dir: String): DataFrame    = load(s, dir, "orders")
   def customer(s: SparkSession, dir: String): DataFrame  = load(s, dir, "customer")
   def supplier(s: SparkSession, dir: String): DataFrame  = load(s, dir, "supplier")
   def part(s: SparkSession, dir: String): DataFrame      = load(s, dir, "part")
@@ -81,7 +94,7 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros, raise_error, when, lit, concat}
     import org.apache.spark.sql.types.{LongType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = loadWide(s, dir, "events")
+    val raw = load(s, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         // A long-typed ts only arrives via the nanosAsLong legacy read of
@@ -101,6 +114,6 @@ object Tables {
       case _             => raw.withColumn("ts", col("ts").cast(TimestampType))
     }
   }
-  def documents(s: SparkSession, dir: String): DataFrame = loadWide(s, dir, "documents")
-  def embeddings(s: SparkSession, dir: String): DataFrame = loadWide(s, dir, "embeddings")
+  def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
+  def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 }

@@ -227,7 +227,7 @@ object Approx {
   /** Union STORED sketches into the global estimate — no event data
     * touched. Spec pins this equal to the in-session union estimate. */
   def a4UnionFrom(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path).agg(hll_union_agg(col("sk")).as("sk"))
+    Tables.parquet(s, path).agg(hll_union_agg(col("sk")).as("sk"))
       .select(hll_sketch_estimate(col("sk")).as("est"))
 
   // ---- a5: mergeable DETERMINISTIC histogram sketches (quantile union) ----
@@ -334,7 +334,7 @@ object Approx {
     * `__all__` brackets. */
   def a5QuantilesFrom(s: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val merged = s.read.parquet(path).groupBy("bin").agg(sum("cnt").as("cnt"))
+    val merged = Tables.parquet(s, path).groupBy("bin").agg(sum("cnt").as("cnt"))
     val cum = merged
       .withColumn("cum", sum("cnt").over(
         Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)))

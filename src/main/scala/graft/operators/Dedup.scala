@@ -1637,7 +1637,7 @@ object Dedup {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
 
   def bloomSketchRead(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
 
   private[operators] def bloomProbeFrom(sketch: DataFrame, batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalarSubquery, XxHash64}
@@ -2385,7 +2385,7 @@ object Dedup {
     * one-shot [[d24FuzzyIncremental]]. */
   def d24ScreenFrom(s: SparkSession, dir: String, path: String): DataFrame =
     d24Screen(d24NewBatch(s, dir),
-      s.read.parquet(path + "/bands"), s.read.parquet(path + "/texts"))
+      Tables.parquet(s, path + "/bands"), Tables.parquet(s, path + "/texts"))
 
   private val d24CorpusSql =
     s"""SELECT doc_id, text FROM documents

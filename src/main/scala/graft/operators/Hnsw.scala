@@ -1084,7 +1084,7 @@ object Hnsw {
   def s22FromPersisted(s: SparkSession, dir: String, path: String): DataFrame = {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val batch = insertionBatch(s, dir)
-    withCachedAdj(s.read.parquet(path)) { adj =>
+    withCachedAdj(Tables.parquet(s, path)) { adj =>
       searchFrame(e.unionByName(batch), insertBatch(e, adj, batch),
         Similarity.externalQueries(s, dir))
     }
@@ -1374,7 +1374,7 @@ object Hnsw {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val doomed = e.filter(col("vec_id").isin(deleteIds: _*))
     val survivors = e.filter(!col("vec_id").isin(deleteIds: _*))
-    withCachedAdj(s.read.parquet(path)) { adj =>
+    withCachedAdj(Tables.parquet(s, path)) { adj =>
       searchFrame(survivors, deleteFromAdjacency(survivors, adj, doomed),
         Similarity.externalQueries(s, dir))
     }
@@ -1589,7 +1589,7 @@ object Hnsw {
     def roundTrip(df: DataFrame, tag: String): DataFrame = {
       val path = new org.apache.hadoop.fs.Path(tmp, tag).toString
       df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
     }
     // try/finally: an exception in any round must still delete the
     // scratch dir and release the exact-collapse checkpoint (without it

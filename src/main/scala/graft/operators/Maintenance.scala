@@ -82,7 +82,7 @@ object Maintenance {
       // 6. integrity read-back of the PROMOTED table (post-GC: only the
       // compacted file remains) — the rows the oracle derives from the
       // source table
-      val back = s.read.parquet(table)
+      val back = Tables.parquet(s, table)
       val integ = back.agg(count(lit(1)).as("n"),
         modSum(col("doc_id")).as("idc"), modSum(col("n_chars")).as("cc"))
         .head()
@@ -93,7 +93,7 @@ object Maintenance {
         .withColumn("quality_ppm", (col("n_chars") % lit(1000000L)).cast("long"))
         .write.mode("overwrite").parquet(evolved)
       val changes = SchemaDiff.diff(
-        s.read.parquet(table).schema, s.read.parquet(evolved).schema)
+        Tables.parquet(s, table).schema, Tables.parquet(s, evolved).schema)
       val ledger = Seq(
         ("fragment", "n_files", nFiles),
         ("plan", "n_groups", nGroups),

@@ -490,7 +490,7 @@ object Multimodal {
   /** The deployment twin: screen against the index as persisted by
     * [[m5IndexWrite]] — spec-equal to the one-shot. */
   def m5ScreenFrom(s: SparkSession, dir: String, path: String): DataFrame =
-    m5Screen(m5NewBatch(s, dir), s.read.parquet(path))
+    m5Screen(m5NewBatch(s, dir), Tables.parquet(s, path))
 
   // ---- m7: scene-cut detection over sampled frames ----
 

@@ -66,7 +66,7 @@ object Mutations {
     val staging = path + ".staging"
     val old = path + ".old"
     recoverSwap(s, path)
-    transform(s.read.parquet(path)).write.mode("overwrite").parquet(staging)
+    transform(Tables.parquet(s, path)).write.mode("overwrite").parquet(staging)
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(old), true)

@@ -483,7 +483,7 @@ object Quality {
     * only shuffle is its own (doc,term) count; the cost join is
     * vocabulary-bound (broadcast when it fits, hash-join when not). */
   def t17ScoreFrom(s: SparkSession, path: String, batch: DataFrame): DataFrame = {
-    val stored = s.read.parquet(path)
+    val stored = Tables.parquet(s, path)
     val costs = stored.filter(col("term").isNotNull)
     val dflt = stored.filter(col("term").isNull)
       .select(col("cost_micro").as("dflt_micro"))
@@ -611,7 +611,7 @@ object Quality {
     * history the global default. The batch's only shuffle is its own
     * (doc, bigram) count; every model join is vocabulary-bound. */
   def t33ScoreFrom(s: SparkSession, path: String, batch: DataFrame): DataFrame = {
-    val stored = s.read.parquet(path)
+    val stored = Tables.parquet(s, path)
     val costs = stored.filter(col("bg").isNotNull && !col("bg").endsWith(" "))
     val histDflt = stored.filter(col("bg").isNotNull && col("bg").endsWith(" "))
       .select(substring_index(col("bg"), " ", 1).as("w1"),
@@ -942,7 +942,7 @@ object Quality {
 
   /** Score a (doc_id, lang, text) batch against a stored cost frame. */
   def t19WeightsFrom(s: SparkSession, path: String, batch: DataFrame): DataFrame =
-    dsirScore(dsirFeats(batch), s.read.parquet(path))
+    dsirScore(dsirFeats(batch), Tables.parquet(s, path))
 
   /** t19: DATA SELECTION VIA IMPORTANCE RESAMPLING weights — the DSIR
     * estimator (Xie et al. 2023, arXiv:2302.03169): score each raw

@@ -141,9 +141,9 @@ object Retrieval {
     * in-session query (spec-pinned). */
   def t26ScoreFrom(s: SparkSession, path: String, docs: DataFrame,
                    terms: Seq[String] = QueryTerms): DataFrame = {
-    val idf = s.read.parquet(s"$path/idf")
+    val idf = Tables.parquet(s, s"$path/idf")
       .filter(col("term").isin(terms: _*)).select("term", "idf_micro")
-    val stats = s.read.parquet(s"$path/stats")
+    val stats = Tables.parquet(s, s"$path/stats")
     val toks = docs.select(col("doc_id"), explode(words(col("text"))).as("term"))
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val tf = toks.filter(col("term").isin(terms: _*))

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    same scale any table-format commit already holds there — and
   *    files at/over the target get a singleton group untouched.
   *  - [[compact]]: rewrite each multi-file group as ONE parquet file
-  *    (group-scoped `read.parquet(files).coalesce(1)` — a narrow,
+  *    (group-scoped `Tables.parquet(s, files: _*).coalesce(1)` — a narrow,
   *    shuffle-free rewrite; singleton groups are not rewritten at all,
   *    so an already-compacted table is a no-op).
   *  - [[promote]] / [[vacuum]]: the commit-and-GC half of the loop —
@@ -58,7 +58,7 @@ object CompactionPlanner {
   def fileReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sizes = dataFiles(s, dir).toDF("path", "bytes")
-    val rows = s.read.parquet(dir)
+    val rows = graft.Tables.parquet(s, dir)
       .groupBy(regexp_replace(input_file_name(), "^file:/+", "/").as("path"))
       .agg(count(lit(1)).as("rows"))
     sizes.join(rows, Seq("path"), "left")
@@ -91,7 +91,7 @@ object CompactionPlanner {
     planned.groupBy(_.group).toSeq.sortBy(_._1).map { case (g, fs) =>
       val rewrite = fs.length > 1
       if (rewrite)
-        s.read.parquet(fs.map(_.path): _*).coalesce(1)
+        graft.Tables.parquet(s, fs.map(_.path): _*).coalesce(1)
           .write.mode("overwrite").parquet(s"$outDir/group=$g")
       (g, fs.length, rewrite)
     }

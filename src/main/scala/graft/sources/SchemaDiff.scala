@@ -64,7 +64,7 @@ object SchemaDiff {
     * change plus the go/no-go verdict column a p7-style gate consumes. */
   def auditPaths(s: SparkSession, pathA: String, pathB: String): DataFrame = {
     import s.implicits._
-    val changes = diff(s.read.parquet(pathA).schema, s.read.parquet(pathB).schema)
+    val changes = diff(graft.Tables.parquet(s, pathA).schema, graft.Tables.parquet(s, pathB).schema)
     changes.toDF()
   }
 

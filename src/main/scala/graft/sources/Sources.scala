@@ -57,7 +57,7 @@ object Sources {
     * only that day's directory (verify via PushedFilters/PartitionFilters
     * in .explain). */
   def readEventsPartitioned(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    graft.Tables.parquet(s, path)
 
   /** ORC twin of the parquet sink — the other columnar format a data
     * platform exchanges with Hive/Trino estates (Spark's reader/writer

@@ -72,8 +72,8 @@ object VectorIndexExport {
   case class Loaded(meta: DataFrame, coarse: DataFrame, pq: DataFrame, codes: DataFrame)
 
   def load(s: SparkSession, path: String): Loaded =
-    Loaded(s.read.parquet(s"$path/meta"), s.read.parquet(s"$path/coarse"),
-      s.read.parquet(s"$path/pq"), s.read.parquet(s"$path/codes"))
+    Loaded(graft.Tables.parquet(s, s"$path/meta"), graft.Tables.parquet(s, s"$path/coarse"),
+      graft.Tables.parquet(s, s"$path/pq"), graft.Tables.parquet(s, s"$path/codes"))
 
   /** Probe the STORED index: queries (qid, qemb) → (qid, rank, neighbor).
     * nprobe lists per query, integer ADC over the stored codes, top-k.

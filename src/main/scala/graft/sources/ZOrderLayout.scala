@@ -73,7 +73,7 @@ object ZOrderLayout {
     * `outDir`: ONE range exchange on z, within-partition sort, write. */
   def rewrite(s: SparkSession, inDir: String, outDir: String,
       cols: Seq[String], bits: Int, nFiles: Int): Unit =
-    withZ(s.read.parquet(inDir), cols, bits)
+    withZ(graft.Tables.parquet(s, inDir), cols, bits)
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
@@ -85,7 +85,7 @@ object ZOrderLayout {
   def statsReport(s: SparkSession, dir: String, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    s.read.parquet(dir)
+    graft.Tables.parquet(s, dir)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .orderBy("file")

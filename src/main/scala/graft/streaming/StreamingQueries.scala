@@ -202,7 +202,7 @@ object StreamingQueries {
     * ordered micro-batches. */
   private def source(s: SparkSession, dir: String): DataFrame = {
     val staged = stage(s, dir)
-    val sch = s.read.parquet(s"$staged/batch00.parquet").schema
+    val sch = Tables.parquet(s, s"$staged/batch00.parquet").schema
     s.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(staged)
   }
 
@@ -212,7 +212,7 @@ object StreamingQueries {
     * fixed-overhead. */
   private def sourceRealOnly(s: SparkSession, dir: String): DataFrame = {
     val staged = stage(s, dir)
-    val sch = s.read.parquet(s"$staged/batch00.parquet").schema
+    val sch = Tables.parquet(s, s"$staged/batch00.parquet").schema
     s.readStream.schema(sch).parquet(s"$staged/real")
   }
 
@@ -422,7 +422,7 @@ object StreamingQueries {
   def st4StreamUpsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val staged = stageUpserts(s, dir)
-    val sch = s.read.parquet(s"$staged/batch00.parquet").schema
+    val sch = Tables.parquet(s, s"$staged/batch00.parquet").schema
     val src = s.readStream.schema(sch).option("maxFilesPerTrigger", 1)
       .parquet(staged)
       .as[StreamingUpsert.Upsert]
@@ -518,7 +518,7 @@ object StreamingQueries {
   def st5StreamDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val staged = stageDedup(s, dir)
-    val sch = s.read.parquet(s"$staged/batch00.parquet").schema
+    val sch = Tables.parquet(s, s"$staged/batch00.parquet").schema
     val src = s.readStream.schema(sch).option("maxFilesPerTrigger", 1)
       .parquet(staged).as[DocFp]
     runToTable(s, dedupGate(src).toDF(), OutputMode.Append())

@@ -11,7 +11,7 @@ object TimeQueries {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val plain = args.contains("--plain")
-    // --conf k=v: extra session configs (e.g. spark.graft.scan.widen=false)
+    // --conf k=v: extra session configs (e.g. spark.graft.local.maxBytes=0)
     val confs = args.sliding(2).collect {
       case Array("--conf", kv) if kv.contains('=') =>
         val Array(k, v) = kv.split("=", 2); (k, v)

@@ -57,9 +57,8 @@ class QualitySpec extends SparkSpec {
     val plan = Quality.t9Repetition(spark, sfDir).queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"t9 must not join:\n$plan")
     assert(!plan.contains("Generate"), s"t9 must not explode:\n$plan")
-    // the small-file scan widen (Tables.widened) may add a roundrobin
-    // exchange below the map stage; the SCALE claim is about key-based
-    // shuffles, which must be exactly the final sort's range partitioning
+    // the SCALE claim is about key-based shuffles, which must be exactly
+    // the final sort's range partitioning
     assert("Exchange hashpartitioning".r.findAllIn(plan).isEmpty,
       s"t9 must not hash-shuffle:\n$plan")
     val sorts = "Exchange rangepartitioning".r.findAllIn(plan).size
