@@ -2,13 +2,15 @@ package graft
 
 import java.io.FileNotFoundException
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
+import graft.sources.StoreManifest
 
 /** Column-pruned parquet loaders for the driver-generated test tables.
   *
@@ -21,17 +23,40 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
 
-  /** Every engine parquet read goes through here. A bare
-    * `spark.read.parquet` runs one Spark job per call only to read a
-    * footer (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`), even
-    * for a single file; at interactive sizes that job is a large share of
-    * a read. This reads the same footer on the driver instead and hands
-    * Spark the schema, so the scan plans with no job, and `.schema` of the
-    * result is exactly what Spark's own read resolves to. Layouts it does
-    * not recognise fall back to Spark's own inference (see
-    * [[footerSchema]]). */
-  def parquet(spark: SparkSession, paths: String*): DataFrame =
-    footerSchema(spark, paths).fold(spark.read)(spark.read.schema).parquet(paths: _*)
+  /** Every engine parquet read goes through here; both of its decisions
+    * come from one listing of the paths. A directory holding a committed
+    * `_manifest/` reads as its newest [[StoreManifest]] snapshot. Any
+    * other read is `spark.read.parquet` without its schema-inference job
+    * (one Spark job per call, `ParquetUtils.inferSchema`, only to read a
+    * footer — at interactive sizes a large share of a read): the same
+    * footer is read on the driver and handed to Spark, so the scan plans
+    * with no job and `.schema` is exactly what Spark's read resolves to.
+    * Layouts it does not recognise fall back to Spark's own inference
+    * (see [[footerSchema]]). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val entries = listing(paths, hadoopConf)
+    val committed = paths match {
+      case Seq(root) if entries.exists(_.exists(_.getPath.getName == StoreManifest.ManifestDir)) =>
+        StoreManifest.latest(spark, root)
+      case _ => None
+    }
+    committed match {
+      case Some(snap) => StoreManifest.read(spark, paths.head, snap)
+      case None => entries.flatMap(footerSchema(spark, _, hadoopConf)).fold(spark.read)(spark.read.schema)
+        .parquet(paths: _*)
+    }
+  }
+
+  /** What each path names: the path itself when it is a file, else its
+    * entries. None when a path is missing (a glob is one). */
+  private def listing(paths: Seq[String], hadoopConf: Configuration): Option[Seq[FileStatus]] =
+    Some(paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      val status = try fs.getFileStatus(path) catch { case _: FileNotFoundException => return None }
+      if (status.isFile) Seq(status) else fs.listStatus(path).toSeq
+    })
 
   /** The schema Spark's inference would take, read from the one footer it
     * would touch with `mergeSchema` off: `_common_metadata`, else
@@ -39,19 +64,13 @@ object Tables {
     * `_`/`.` names as Spark's listing does. Spark's own converter turns it
     * into a `StructType` under the session's settings (`binaryAsString`,
     * `int96AsTimestamp`, `inferTimestampNTZ`, `nanosAsLong`), as inference
-    * does. None (Spark's own read) for a missing path (a glob is one), no
-    * data file, partition subdirectories, or schema merging. */
-  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    * does. None (Spark's own read) for no data file, partition
+    * subdirectories, or schema merging. */
+  private def footerSchema(spark: SparkSession, entries: Seq[FileStatus],
+      hadoopConf: Configuration): Option[StructType] = {
     val conf = spark.sessionState.conf
     if (conf.isParquetSchemaMergingEnabled) return None
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val leaves = paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(hadoopConf)
-      val status = try fs.getFileStatus(path) catch { case _: FileNotFoundException => return None }
-      if (status.isFile) Seq(status)
-      else fs.listStatus(path).toSeq.filterNot(f => hiddenName(f.getPath.getName))
-    }
+    val leaves = entries.filterNot(f => hiddenName(f.getPath.getName))
     if (leaves.exists(_.isDirectory)) return None
     val sorted = leaves.sortBy(_.getPath.toString)
     val summaries = Seq("_common_metadata", "_metadata")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.sources.{CompactionPlanner, SchemaDiff}
+import graft.sources.{CompactionPlanner, SchemaDiff, StoreManifest}
 
 /** p9: the TABLE-MAINTENANCE LOOP as one auditable ledger query — the
   * layout/metadata half of a 100 TB lake deployment (Iceberg
@@ -11,35 +11,35 @@ import graft.sources.{CompactionPlanner, SchemaDiff}
   * the reference never needs it because Mongo hides layout) driven
   * END-TO-END and reported as the receipt a platform team reviews:
   *
-  *   fragment → [[CompactionPlanner.plan]] → compact → promote →
-  *   vacuum (dry, then real) → integrity read-back → [[SchemaDiff]]
-  *   verdict on a planted evolution.
+  *   fragment → [[CompactionPlanner.plan]] → compact-commit →
+  *   integrity read-back → evolve-commit (whose retention removes the
+  *   compaction's orphans) → [[SchemaDiff]] verdict on the evolution.
   *
-  * The loop RUNS for real against a scratch copy of `documents`
-  * (fragmented into [[P9Files]] range-partitioned files — the
-  * streaming-ingest small-file pathology), and the ledger carries two
-  * kinds of rows, split deliberately:
+  * The loop RUNS for real against a scratch [[StoreManifest]] table
+  * copied from `documents` (fragmented into [[P9Files]]
+  * range-partitioned files — the streaming-ingest small-file
+  * pathology), and the ledger carries two kinds of rows, split
+  * deliberately:
   *
   *  - **Integrity rows** (rows, id/char modular checksums — the q42
   *    overflow-free receipts) are measured by READING BACK the
-  *    promoted table, and the DuckDB oracle derives the same values
+  *    compacted snapshot, and the DuckDB oracle derives the same values
   *    from the source `documents` table: equality across engines IS
-  *    the proof that plan∘compact∘promote∘vacuum conserved every row
-  *    and lost none to the GC.
+  *    the proof that plan∘compact conserved every row.
   *  - **Loop-shape rows** (file/group/orphan counts, the schema
   *    verdict) are DEFINED constants of this query's construction
   *    (P9Files fragments, one all-fits bin, the planted
   *    drop-column/add-column evolution); the Spark side measures each
-  *    from the real filesystem effects — a rename that failed, an
-  *    orphan that survived vacuum, or a diff row that went missing
+  *    from the real filesystem effects — the files each commit names,
+  *    an orphan that survived retention, or a diff row that went missing
   *    flips the measured value off its documented constant and the
   *    driver's hash compare catches it.
   *
-  * Scale: planning and promotion are metadata-bound (one listing, one
-  * rename per group); the only corpus-sized work is the group-scoped
-  * shuffle-free rewrite and the one read-back aggregate — exactly the
-  * cost profile a real OPTIMIZE job has. The scratch directory is
-  * per-invocation (no cross-run state) and removed before returning.
+  * Scale: planning reads only the manifest; the only corpus-sized work
+  * is the group-scoped shuffle-free rewrite, the evolved rewrite and the
+  * one read-back aggregate — the cost profile a real OPTIMIZE job has.
+  * The scratch directory is per-invocation (no cross-run state) and
+  * removed before returning.
   */
 object Maintenance {
 
@@ -58,49 +58,45 @@ object Maintenance {
     val scratch = java.nio.file.Files
       .createTempDirectory("graft-p9-").toString
     val table = s"$scratch/table"
-    val rewriteOut = s"$scratch/rewritten"
-    val evolved = s"$scratch/evolved"
     try {
       // 1. the pathology: a streaming ingest left P9Files small files
-      Tables.documents(s, dir)
+      val v1 = StoreManifest.write(s, table, Tables.documents(s, dir)
         .select("doc_id", "text", "lang", "source", "n_chars")
-        .repartitionByRange(P9Files, col("doc_id"))
-        .write.mode("overwrite").parquet(table)
+        .repartitionByRange(P9Files, col("doc_id")), None, None, keep = _ => false)
       val nFiles = CompactionPlanner.fileReport(s, table).count()
-      // 2-4. plan (all-fits target → one group), compact, promote
-      val target = Long.MaxValue / 4
-      val planned = CompactionPlanner.plan(s, table, target)
+      // 2-4. plan (all-fits target → one group), compact as one commit
+      val planned = CompactionPlanner.plan(v1, Long.MaxValue / 4)
       val nGroups = planned.map(_.group).distinct.size.toLong
       val nSingle = planned.groupBy(_.group).count(_._2.size == 1).toLong
-      val rewritten = CompactionPlanner.compact(s, table, rewriteOut, target)
-        .count(_._3).toLong
-      val live = CompactionPlanner.promote(s, table, rewriteOut, planned)
-      // 5. vacuum: audit first (dry), then GC for real
-      val orphans = CompactionPlanner.vacuum(s, table, live).size.toLong
-      val deleted = CompactionPlanner.vacuum(s, table, live, dryRun = false)
-        .count(_._3).toLong
-      // 6. integrity read-back of the PROMOTED table (post-GC: only the
-      // compacted file remains) — the rows the oracle derives from the
-      // source table
-      val back = Tables.parquet(s, table)
+      val v2 = CompactionPlanner.compact(s, table, v1, planned)
+      val rewritten = v2.files.count(f => !v1.files.contains(f)).toLong
+      val orphans = v1.files.filterNot(v2.files.contains)
+      // 5. integrity read-back of the compacted snapshot — the rows the
+      // oracle derives from the source table
+      val back = StoreManifest.read(s, table, v2)
       val integ = back.agg(count(lit(1)).as("n"),
         modSum(col("doc_id")).as("idc"), modSum(col("n_chars")).as("cc"))
         .head()
-      // 7. planted schema evolution: drop `source` (breaking), add a
-      // nullable derived column (compatible) — the review a promotion
-      // gate runs before swapping readers over
-      back.drop("source")
-        .withColumn("quality_ppm", (col("n_chars") % lit(1000000L)).cast("long"))
-        .write.mode("overwrite").parquet(evolved)
+      // 6. planted schema evolution committed as the next version: drop
+      // `source` (breaking), add a nullable derived column (compatible).
+      // Its retention deletes the files the compaction superseded.
+      val v3 = StoreManifest.write(s, table, back.drop("source")
+        .withColumn("quality_ppm", (col("n_chars") % lit(1000000L)).cast("long")),
+        None, Some(v2), keep = _ => false)
+      val fs = new org.apache.hadoop.fs.Path(table).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val deleted = orphans.count(f => !fs.exists(new org.apache.hadoop.fs.Path(table, f.path))).toLong
+      // 7. the review of the evolution, between the two committed schemas
       val changes = SchemaDiff.diff(
-        Tables.parquet(s, table).schema, Tables.parquet(s, evolved).schema)
+        StoreManifest.read(s, table, v2).schema, StoreManifest.read(s, table, v3).schema)
+      // step names are part of the oracle's rows: `promote` is the
+      // compaction's commit, `vacuum` its retention
       val ledger = Seq(
         ("fragment", "n_files", nFiles),
         ("plan", "n_groups", nGroups),
         ("plan", "n_singletons", nSingle),
         ("compact", "groups_rewritten", rewritten),
-        ("promote", "live_files", live.size.toLong),
-        ("vacuum", "orphans", orphans),
+        ("promote", "live_files", v2.files.size.toLong),
+        ("vacuum", "orphans", orphans.size.toLong),
         ("vacuum", "deleted", deleted),
         ("integrity", "rows", integ.getLong(0)),
         ("integrity", "id_checksum", integ.getLong(1)),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoreManifest
 
 /** Mutation surface: field-level $set patches and SQL write DML
   * (INSERT/UPDATE/DELETE), re-expressed as deterministic batch
@@ -47,45 +48,18 @@ object Mutations {
   def insertRows(df: DataFrame, rows: DataFrame): DataFrame =
     df.unionByName(rows)
 
-  /** Read-modify-overwrite for a parquet table: apply `transform` to the
-    * table at `path`, write the new state to `path.staging`, then swap
-    * directories (the copy-on-write versioning pattern — Spark cannot
-    * overwrite a path it is reading). Works on any Hadoop filesystem.
-    *
-    * NOT atomic: between rename(path → path.old) and
-    * rename(staging → path) there is a crash window where `path` does
-    * not exist and the only committed data lives at `path.old`. Both
-    * this method (on entry) and [[recoverSwap]] (for standalone readers)
-    * detect that state and restore `path.old` → `path` before
-    * proceeding, so a crashed swap heals on the next touch instead of
-    * needing manual repair. A production multi-writer deployment should
-    * use a table format with a transactional pointer (Delta/Iceberg
-    * commit log) — this primitive is the single-writer core of that
-    * pattern. */
+  /** Read-modify-write for a parquet table: apply `transform` to the
+    * newest committed snapshot of the table at `path` and commit the
+    * result as the next [[StoreManifest]] version (the copy-on-write
+    * pattern of Delta/Iceberg: new files, then one atomic pointer swap).
+    * A plain parquet directory is adopted as version 1 first. A reader
+    * sees the old rows or the new ones, never neither; a rewrite that dies
+    * before its commit leaves the old rows, and the next commit removes
+    * its files. */
   def rewriteInPlace(s: SparkSession, path: String)(transform: DataFrame => DataFrame): Unit = {
-    val staging = path + ".staging"
-    val old = path + ".old"
-    recoverSwap(s, path)
-    transform(Tables.parquet(s, path)).write.mode("overwrite").parquet(staging)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(old), true)
-    fs.rename(hp, new org.apache.hadoop.fs.Path(old))
-    fs.rename(new org.apache.hadoop.fs.Path(staging), hp)
-    fs.delete(new org.apache.hadoop.fs.Path(old), true)
-  }
-
-  /** Heal a swap that crashed mid-rename: if `path` is missing but
-    * `path.old` exists, the previous state is restored (the staged new
-    * version, if complete, is left at `path.staging` for inspection —
-    * it was never committed). No-op when `path` is healthy. */
-  def recoverSwap(s: SparkSession, path: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp) && fs.exists(oldP)) {
-      require(fs.rename(oldP, hp), s"recoverSwap: restore $oldP -> $hp failed")
-    }
+    val base = StoreManifest.latest(s, path).getOrElse(StoreManifest.adopt(s, path))
+    StoreManifest.write(s, path, transform(StoreManifest.read(s, path, base)), base.partitionColumn,
+      Some(base), keep = _ => false)
   }
 
   // ---- field-level $set merge ----
@@ -318,8 +292,9 @@ object Mutations {
     * broadcast; deleted-order keys are another sliver joined into
     * lineitem (at 100 TB a shuffle join AQE right-sizes); every count/
     * checksum is one map-combined aggregate per table. No table is
-    * rewritten here — the ledger is the query; the rewrite itself is
-    * [[rewriteInPlace]]'s copy-on-write path (q24's machinery). */
+    * rewritten here — the ledger is the query; applying the deletes is
+    * one [[rewriteInPlace]] with [[deleteWhere]] per table, each an atomic
+    * manifest commit (the four commits are not one transaction). */
   def q42CascadeDelete(s: SparkSession, dir: String): DataFrame = {
     val forget = Tables.customer(s, dir)
       .filter(col("c_custkey") % ForgetMod === 0)

@@ -72,7 +72,7 @@ object IvfIndex {
     * carries the codebook inline. */
   def build(embeddings: DataFrame, centroids: Array[Array[Float]], path: String): Unit = {
     val s = embeddings.sparkSession
-    StoreManifest.write(s, path, assign(embeddings, centroids), "cid",
+    StoreManifest.write(s, path, assign(embeddings, centroids), Some("cid"),
       StoreManifest.latest(s, path), keep = _ => false, codebook = Some(centroids))
   }
 
@@ -93,7 +93,7 @@ object IvfIndex {
     val base = StoreManifest.latest(s, path)
     require(base.flatMap(_.codebook).forall(_.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq),
       s"$path: append must assign against the store's own codebook")
-    StoreManifest.write(s, path, assign(newBatch, centroids), "cid", base, keep = _ => true,
+    StoreManifest.write(s, path, assign(newBatch, centroids), Some("cid"), base, keep = _ => true,
       codebook = Some(centroids))
   }
 

@@ -26,7 +26,7 @@ object VectorStoreSink {
 
   def write(index: DataFrame, path: String): Unit = {
     val s = index.sparkSession
-    StoreManifest.write(s, path, index, Partition, StoreManifest.latest(s, path), keep = _ => false)
+    StoreManifest.write(s, path, index, Some(Partition), StoreManifest.latest(s, path), keep = _ => false)
   }
 
   /** Append one streaming micro-batch of index rows. The batch id is
@@ -35,7 +35,7 @@ object VectorStoreSink {
     val s = index.sparkSession
     val base = StoreManifest.latest(s, path)
     if (!base.flatMap(_.batchId).exists(_ >= batchId))
-      StoreManifest.write(s, path, index, Partition, base, keep = _ => true,
+      StoreManifest.write(s, path, index, Some(Partition), base, keep = _ => true,
         batchId = Some(batchId))
   }
 
@@ -59,7 +59,7 @@ object VectorStoreSink {
       val keys = affected.map(_.toString).toSet
       val survivors = store.filter(col(Partition).isin(affected.toSeq: _*))
         .filter(!col("chunk_uid").isin(ids: _*))
-      StoreManifest.write(s, path, survivors, Partition, Some(base), keep = b => !keys(b))
+      StoreManifest.write(s, path, survivors, Some(Partition), Some(base), keep = f => !keys(f.partition))
     }
   }
 

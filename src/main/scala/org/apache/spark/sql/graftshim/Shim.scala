@@ -20,6 +20,12 @@ object Shim {
     * package need it to declare `inputTypes` (ImplicitCastInputTypes). */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
 
+  /** `StructType.asNullable` is `private[spark]`: the schema a parquet read
+    * reports for files of schema `t` (a file source relaxes every field to
+    * nullable, as `DataSource.resolveRelation` does). */
+  def asNullable(t: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    t.asNullable
+
   /** `df.localCheckpoint()` followed by `df.count()` runs TWO jobs over
     * the same rows: Dataset.checkpoint(eager=true) materializes the
     * checkpointed RDD with an internal count whose VALUE it discards,

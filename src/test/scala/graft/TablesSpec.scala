@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import graft.operators.Mutations
-import graft.sources.SchemaDiff
+import graft.sources.{SchemaDiff, StoreManifest}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -157,7 +157,7 @@ class TablesSpec extends SparkSpec {
       before.repartition(3).write.parquet(path)
       val batch = Seq((100L, "new0", 1.0), (101L, "new1", 2.0)).toDF("id", "s", "x")
       Mutations.rewriteInPlace(spark, path)(df => Mutations.insertRows(df, batch))
-      assert(rows(spark.read.parquet(path)) == rows(before.unionByName(batch)))
+      assert(rows(Tables.parquet(spark, path)) == rows(before.unionByName(batch)))
     } finally rm(new File(dir))
   }
 
@@ -172,6 +172,15 @@ class TablesSpec extends SparkSpec {
       var audit: DataFrame = null
       assert(jobsDuring { audit = SchemaDiff.auditPaths(spark, s"$dir/a", s"$dir/b") } == 0)
       assert(audit.collect().map(_.getAs[String]("column")).toSet == Set("extra", "k"))
+      // a manifest-addressed table: non-null columns, as Spark writes them,
+      // read back nullable, as spark.read.parquet of its files resolves them
+      val table = s"$dir/m"
+      val snap = StoreManifest.write(spark, table,
+        spark.range(0, 10).selectExpr("id", "array(id, id + 1) as v", "named_struct('x', id) as st"),
+        None, None, keep = _ => false)
+      assert(jobsDuring(Tables.parquet(spark, table).schema) == 0)
+      val files = snap.files.map(f => s"$table/${f.path}")
+      assert(Tables.parquet(spark, table).schema == spark.read.parquet(files: _*).schema)
       // the counter does see jobs: Spark's own inference runs one
       assert(jobsDuring(spark.read.parquet(s"$dir/a").schema) >= 1)
     } finally rm(new File(dir))

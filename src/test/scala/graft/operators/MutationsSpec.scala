@@ -72,7 +72,7 @@ class MutationsSpec extends SparkSpec {
       Mutations.updateWhere(Mutations.deleteWhere(df, col("id") === 2),
         col("id") === 3, Map("s" -> lit("Z")))
     }
-    val r = spark.read.parquet(path).orderBy("id").collect()
+    val r = graft.Tables.parquet(spark, path).orderBy("id").collect()
       .map(x => (x.getInt(0), x.getString(1)))
     assert(r.toSeq == Seq((1, "x"), (3, "Z")))
     // no staging/old leftovers
@@ -80,20 +80,27 @@ class MutationsSpec extends SparkSpec {
     assert(names == Seq("t.parquet"), names.toString)
   }
 
-  test("recoverSwap heals the crash window between the two renames") {
+  test("a rewrite that lands files but never commits leaves the previous rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dml").toString
     val path = s"$dir/t.parquet"
     Seq((1, "x"), (2, "y")).toDF("id", "s").write.parquet(path)
-    // simulate a crash after rename(path -> path.old): the table path is
-    // missing and the only committed data lives at path.old
-    assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
-    // a standalone reader heals explicitly…
-    Mutations.recoverSwap(spark, path)
-    assert(spark.read.parquet(path).count() == 2)
-    // …and rewriteInPlace heals on entry before transforming
-    assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
+    Mutations.rewriteInPlace(spark, path)(df => Mutations.insertRows(df, Seq((3, "z")).toDF("id", "s")))
+    def dataFiles() = new java.io.File(path).list().filter(_.endsWith(".parquet")).toSet
+    val committed = dataFiles()
+    // the fault: a rewrite's files land in the table directory and in a
+    // staging directory, and its manifest commit never happens
+    val ghosts = Seq((1, "ghost"), (9, "ghost")).toDF("id", "s")
+    ghosts.write.mode("append").parquet(path)
+    ghosts.write.parquet(s"$path/_staging/crashed")
+    val orphans = dataFiles() -- committed
+    assert(orphans.nonEmpty)
+    def ids() = graft.Tables.parquet(spark, path).collect().map(_.getInt(0)).sorted.toSeq
+    assert(ids() == Seq(1, 2, 3))
+    // the next rewrite reads the committed rows and removes the orphans
     Mutations.rewriteInPlace(spark, path)(df => Mutations.deleteWhere(df, col("id") === 2))
-    assert(spark.read.parquet(path).collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(ids() == Seq(1, 3))
+    assert((dataFiles() & orphans).isEmpty)
+    assert(!new java.io.File(s"$path/_staging/crashed").exists())
   }
 
   test("q35 $addToSet merge carries base-only tags, set-dedups, and upserts new keys") {

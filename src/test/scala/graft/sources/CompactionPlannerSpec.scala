@@ -5,16 +5,22 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** CompactionPlanner: the report's accounting, the packer's exactness
-  * and determinism, and conservation through an actual rewrite. */
+  * and determinism, and conservation through an actual commit. */
 class CompactionPlannerSpec extends SparkSpec {
 
   private def smallFileTable(n: Int): String = {
     val dir = Files.createTempDirectory("graft-compact").toFile.getAbsolutePath + "/t"
-    graft.Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_partkey", "l_quantity")
-      .repartition(n).write.parquet(dir)
+    StoreManifest.write(spark, dir, graft.Tables.lineitem(spark, sfDir)
+      .select("l_orderkey", "l_partkey", "l_quantity").repartition(n), None, None, keep = _ => false)
     dir
   }
+
+  private def sig(df: org.apache.spark.sql.DataFrame) = df.agg(
+    count(lit(1)), sum(col("l_orderkey") % 997), sum(col("l_partkey") % 997),
+    sum((col("l_quantity").cast("decimal(18,2)") * 100).cast("long") % 997)).head()
+
+  private def dataFiles(dir: String): Set[String] =
+    new java.io.File(dir).list().filter(_.endsWith(".parquet")).toSet
 
   test("fileReport accounts every row and every data file") {
     val dir = smallFileTable(12)
@@ -27,82 +33,58 @@ class CompactionPlannerSpec extends SparkSpec {
 
   test("plan partitions the file set into target-bounded groups, deterministically") {
     val dir = smallFileTable(12)
-    val sizes = CompactionPlanner.fileReport(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val target = sizes.values.sum / 3
-    val planned = CompactionPlanner.plan(spark, dir, target)
+    val snap = StoreManifest.snapshot(spark, dir)
+    val target = snap.files.map(_.size).sum / 3
+    val planned = CompactionPlanner.plan(snap, target)
     // exact partition of the file set
-    assert(planned.map(_.path).sorted == sizes.keys.toSeq.sorted)
+    assert(planned.map(_.file).sortBy(_.path) == snap.files.sortBy(_.path))
     // group fill respects the target unless a single file overflows it
     planned.groupBy(_.group).foreach { case (g, fs) =>
-      val fill = fs.map(_.bytes).sum
+      val fill = fs.map(_.file.size).sum
       assert(fill <= target || fs.length == 1, s"group $g overfilled with ${fs.length} files")
     }
     // fewer groups than files (the point), and FFD is deterministic
     assert(planned.map(_.group).distinct.length < 12)
-    assert(CompactionPlanner.plan(spark, dir, target) == planned)
+    assert(CompactionPlanner.plan(snap, target) == planned)
     // an impossible target degenerates to one singleton group per file
-    val singletons = CompactionPlanner.plan(spark, dir, 1L)
+    val singletons = CompactionPlanner.plan(snap, 1L)
     assert(singletons.map(_.group).distinct.length == 12)
   }
 
   test("compact rewrites each multi-file group as one file and conserves content") {
     val dir = smallFileTable(12)
-    val target = CompactionPlanner.fileReport(spark, dir).collect()
-      .map(_.getLong(1)).sum / 3
-    val out = Files.createTempDirectory("graft-compact-out").toFile.getAbsolutePath + "/o"
-    val done = CompactionPlanner.compact(spark, dir, out, target)
-    assert(done.exists(_._3), "at least one group must be rewritten")
-    def sig(df: org.apache.spark.sql.DataFrame) = df.agg(
-      count(lit(1)), sum(col("l_orderkey") % 997), sum(col("l_partkey") % 997),
-      sum((col("l_quantity").cast("decimal(18,2)") * 100).cast("long") % 997)).head()
-    val before = sig(spark.read.parquet(dir))
-    // reassemble: rewritten groups from out/, skipped singletons in place
-    val planned = CompactionPlanner.plan(spark, dir, target)
-    val rewritten = done.filter(_._3).map { case (g, _, _) => s"$out/group=$g" }
-    val kept = done.filter(!_._3).flatMap { case (g, _, _) =>
-      planned.filter(_.group == g).map(_.path)
-    }
-    val after = sig(spark.read.parquet(rewritten ++ kept: _*))
-    assert(after == before, "compaction must conserve rows and content checksums")
-    // exactly one data file per rewritten group
-    rewritten.foreach { p =>
-      val n = CompactionPlanner.fileReport(spark, p).count()
-      assert(n == 1L, s"$p should hold exactly one data file, saw $n")
-    }
+    val base = StoreManifest.snapshot(spark, dir)
+    val planned = CompactionPlanner.plan(base, base.files.map(_.size).sum / 3)
+    val groups = planned.groupBy(_.group).values.toSeq
+    val after = CompactionPlanner.compact(spark, dir, base, planned)
+    assert(after.version == base.version + 1)
+    assert(sig(StoreManifest.read(spark, dir, after)) == sig(StoreManifest.read(spark, dir, base)),
+      "compaction must conserve rows and content checksums")
+    // exactly one new file per rewritten group; singleton files kept as they were
+    val multi = groups.count(_.length > 1)
+    assert(multi > 0, "at least one group must be rewritten")
+    assert(after.files.count(f => !base.files.contains(f)) == multi)
+    assert(groups.filter(_.length == 1).map(_.head.file).forall(after.files.contains))
+    // a table with nothing to pack is left as it is
+    assert(CompactionPlanner.compact(spark, dir, after, CompactionPlanner.plan(after, 1L)) == after)
   }
 
-  test("promote + vacuum close the loop: commit, GC exactly the orphans, conserve") {
+  test("a compaction is one commit: readers see the source content throughout; originals go a commit later") {
     val dir = smallFileTable(12)
-    val target = CompactionPlanner.fileReport(spark, dir).collect()
-      .map(_.getLong(1)).sum / 3
-    def sig(df: org.apache.spark.sql.DataFrame) = df.agg(
-      count(lit(1)), sum(col("l_orderkey") % 997), sum(col("l_partkey") % 997),
-      sum((col("l_quantity").cast("decimal(18,2)") * 100).cast("long") % 997)).head()
-    val before = sig(spark.read.parquet(dir))
-
-    val planned = CompactionPlanner.plan(spark, dir, target)
-    val out = Files.createTempDirectory("graft-promote-out").toFile.getAbsolutePath + "/o"
-    CompactionPlanner.compact(spark, dir, out, target)
-    val live = CompactionPlanner.promote(spark, dir, out, planned)
-
-    // the expected orphans: originals of every multi-file group
-    val multi = planned.groupBy(_.group).filter(_._2.length > 1)
-      .values.flatten.map(_.path).toSet
-    assert(multi.nonEmpty, "fixture must compact something")
-    val dry = CompactionPlanner.vacuum(spark, dir, live) // dryRun default
-    assert(dry.map(_._1).toSet == multi, "dry-run must list exactly the orphans")
-    assert(dry.forall(!_._3), "dry-run must delete nothing")
-    assert(sig(spark.read.parquet(dir)) != before,
-      "pre-GC the table double-counts the rewritten groups")
-
-    val gone = CompactionPlanner.vacuum(spark, dir, live, dryRun = false)
-    assert(gone.forall(_._3) && gone.map(_._1).toSet == multi)
-    // post-GC: content conserved, layout is live ∪ nothing else
-    assert(sig(spark.read.parquet(dir)) == before,
-      "post-GC content must equal the original table")
-    val remaining = CompactionPlanner.fileReport(spark, dir).collect().map(_.getString(0)).toSet
-    assert(remaining == live, "only the live manifest may remain")
-    assert(CompactionPlanner.vacuum(spark, dir, live).isEmpty, "GC is idempotent")
+    val before = sig(graft.Tables.parquet(spark, dir))
+    val base = StoreManifest.snapshot(spark, dir)
+    val planned = CompactionPlanner.plan(base, base.files.map(_.size).sum / 3)
+    val replaced = planned.groupBy(_.group).values.filter(_.length > 1).flatten.map(_.file.path).toSet
+    assert(replaced.nonEmpty, "fixture must compact something")
+    val after = CompactionPlanner.compact(spark, dir, base, planned)
+    // the originals are still on disk, yet neither snapshot counts a row twice
+    assert(replaced.subsetOf(dataFiles(dir)))
+    assert(sig(graft.Tables.parquet(spark, dir)) == before, "after the commit: the source content")
+    assert(sig(StoreManifest.read(spark, dir, base)) == before, "a reader of the base finishes")
+    // the following commit removes exactly the replaced originals
+    val next = StoreManifest.write(spark, dir, StoreManifest.read(spark, dir, after).limit(1),
+      None, Some(after), keep = _ => true)
+    assert((dataFiles(dir) & replaced).isEmpty)
+    assert(dataFiles(dir) == next.files.map(_.path).toSet)
   }
 }

@@ -8,12 +8,14 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.operators.RagPipeline
+import graft.operators.{Mutations, RagPipeline}
+import graft.streaming.StreamingCompaction
 import org.apache.spark.sql.functions._
 
-/** The manifest commit of the on-disk vector stores: one snapshot per
-  * read while appends, deletes and rebuilds run, and a write that dies
-  * before its commit leaves the previous snapshot readable. */
+/** The manifest commit of every table graft rewrites: one snapshot per
+  * read while appends, deletes, rewrites, compactions and rebuilds run,
+  * and a write that dies before its commit leaves the previous snapshot
+  * readable. */
 class StoreManifestSpec extends SparkSpec {
 
   private def tmp(name: String) = Files.createTempDirectory(name).toString
@@ -34,13 +36,16 @@ class StoreManifestSpec extends SparkSpec {
   }
 
   test("manifest round-trips through its JSON form") {
-    val snap = StoreSnapshot(7L, "cid",
+    val snap = StoreSnapshot(7L, Some("cid"),
       new org.apache.spark.sql.types.StructType().add("vec_id", "long").add("cid", "int"),
       Seq(StoreFile("3", "cid=3/part-0.parquet", 10L, 20L)),
       Some(Array(Array(0.1f, -2.5f), Array(1f / 3, 0f))), Some(4L))
     val back = StoreManifest.fromJson(StoreManifest.toJson(snap))
     assert(back.copy(codebook = None) == snap.copy(codebook = None))
     assert(back.codebook.get.map(_.toSeq).toSeq == snap.codebook.get.map(_.toSeq).toSeq)
+    val plain = snap.copy(partitionColumn = None, files = Seq(StoreFile("", "part-0.parquet", 10L, 20L)),
+      codebook = None, batchId = None)
+    assert(StoreManifest.fromJson(StoreManifest.toJson(plain)) == plain)
   }
 
   test("two writers from one version: one commits, the other aborts and leaves nothing") {
@@ -49,10 +54,10 @@ class StoreManifestSpec extends SparkSpec {
     smallStore(dir)
     val base = StoreManifest.snapshot(spark, dir)
     val rows = Seq((9L, 3, "x")).toDF("chunk_uid", "bucket", "payload")
-    StoreManifest.write(spark, dir, rows, "bucket", Some(base), keep = _ => true)
+    StoreManifest.write(spark, dir, rows, Some("bucket"), Some(base), keep = _ => true)
     val filesAfterWin = dataFiles(dir)
     intercept[java.util.ConcurrentModificationException] {
-      StoreManifest.write(spark, dir, rows, "bucket", Some(base), keep = _ => true)
+      StoreManifest.write(spark, dir, rows, Some("bucket"), Some(base), keep = _ => true)
     }
     assert(StoreManifest.snapshot(spark, dir).version == base.version + 1)
     assert(dataFiles(dir) == filesAfterWin)
@@ -76,6 +81,17 @@ class StoreManifestSpec extends SparkSpec {
     VectorStoreSink.append(batch, dir, batchId = 0L)
     assert(StoreManifest.snapshot(spark, dir).version == v3.version)
     assert(ids(StoreManifest.read(spark, dir), "chunk_uid") == Set(2L, 3L, 4L, 5L))
+
+    // the unpartitioned streamed append of StreamingCompaction, likewise
+    val table = tmp("manifest-stream") + "/t"
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+    StreamingCompaction.append(rows, table, batchId = 0L)
+    StreamingCompaction.append(rows, table, batchId = 0L)
+    StreamingCompaction.append(rows.withColumn("id", col("id") + 10), table, batchId = 1L)
+    val snap = StoreManifest.snapshot(spark, table)
+    assert(snap.version == 2L && snap.batchId.contains(1L) && snap.partitionColumn.isEmpty)
+    assert(graft.Tables.parquet(spark, table).count() == 4L)
+    assert(ids(graft.Tables.parquet(spark, table), "id") == Set(1L, 2L, 11L, 12L))
   }
 
   test("a write that lands files but never commits leaves the previous snapshot") {
@@ -132,6 +148,20 @@ class StoreManifestSpec extends SparkSpec {
       .toDF("vec_id", "embedding"), 3, root)
     val ivfCommitted = new AtomicLong(60L)
 
+    // an unpartitioned table: a plain directory, adopted by its first rewrite
+    val plain = tmp("manifest-conc-plain") + "/t"
+    spark.range(0, 40, 1, 4).selectExpr("id", "id * 3 as x").write.parquet(plain)
+    def state(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)), sum("x")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val plainCommitted = scala.collection.mutable.Set(state(graft.Tables.parquet(spark, plain)))
+    val plainSeen = java.util.concurrent.ConcurrentHashMap.newKeySet[(Long, Long)]()
+    def plainCommit(write: => Unit): Unit = {
+      write
+      plainCommitted += state(graft.Tables.parquet(spark, plain))
+    }
+
     val deleted = new AtomicReference(Set.empty[Long])
     val stop = new AtomicBoolean(false)
     val faults = new ConcurrentLinkedQueue[String]()
@@ -164,9 +194,11 @@ class StoreManifestSpec extends SparkSpec {
       val n = StoreManifest.read(spark, s"$root/gen_$g").count()
       if (n < floor) faults.add(s"ivf: gen_$g holds $n vectors, $floor committed")
     }
+    val plainReader = reader("plain") { plainSeen.add(state(graft.Tables.parquet(spark, plain))) }
 
     try {
       doomed.zipWithIndex.foreach { case (ids, round) =>
+        plainCommit(Mutations.rewriteInPlace(spark, plain)(df => Mutations.deleteWhere(df, col("id") % 7 === round)))
         val g = VectorStoreMaintenance.currentGen(spark, root)
         val batch = (0 until 10).map(i => (1000L * (round + 1) + i, vec(i % 3, i)))
         IvfIndex.append(batch.toDF("vec_id", "embedding"),
@@ -174,17 +206,23 @@ class StoreManifestSpec extends SparkSpec {
         ivfCommitted.addAndGet(batch.size)
         VectorStoreSink.deleteByIds(spark, lsh, ids.map(_._1))
         deleted.updateAndGet(_ ++ ids.map(_._1))
+        plainCommit(StreamingCompaction.append(spark.range(100L * (round + 1), 100L * (round + 1) + 5, 1, 2)
+          .selectExpr("id", "id * 3 as x"), plain, batchId = round.toLong))
         val drift = (0 until 10).map(i => (5000L * (round + 1) + i, vec(3 + i % 3, i)))
         val report = VectorStoreMaintenance.absorb(spark, drift.toDF("vec_id", "embedding"), root,
           thresholdPpm = -1L)
         assert(report.retrained && report.generation == g + 1)
         ivfCommitted.addAndGet(drift.size)
+        val snap = StoreManifest.snapshot(spark, plain)
+        plainCommit(CompactionPlanner.compact(spark, plain, snap, CompactionPlanner.plan(snap, Long.MaxValue / 4)))
       }
     } finally {
       stop.set(true)
-      lshReader.join(); ivfReader.join()
+      lshReader.join(); ivfReader.join(); plainReader.join()
     }
     assert(faults.isEmpty, faults.asScala.mkString("\n"))
+    assert(plainSeen.asScala.subsetOf(plainCommitted),
+      s"plain: read ${plainSeen.asScala -- plainCommitted}, committed $plainCommitted")
     assert(reads.get() >= 4, s"only ${reads.get()} reads overlapped the writes")
     assert(VectorStoreMaintenance.currentGen(spark, root) == doomed.size)
     // each rebuild retires the generations below the one it superseded

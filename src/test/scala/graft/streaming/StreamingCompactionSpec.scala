@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.sources.CompactionPlanner
+import graft.sources.{CompactionPlanner, StoreManifest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -15,11 +15,11 @@ class StreamingCompactionSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     val root = java.nio.file.Files.createTempDirectory("graft-sc").toString
-    val (table, work, ckpt) = (s"$root/table", s"$root/work", s"$root/ckpt")
+    val (table, ckpt) = (s"$root/table", s"$root/ckpt")
 
     val mem = MemoryStream[(Long, String)]
     val (q, compactions) = StreamingCompaction.start(spark,
-      mem.toDF().toDF("id", "payload"), table, work, ckpt,
+      mem.toDF().toDF("id", "payload"), table, ckpt,
       maxFiles = 6, targetBytes = 512L * 1024)
 
     val batches = (0 until 8).map(b =>
@@ -29,10 +29,11 @@ class StreamingCompactionSpec extends SparkSpec {
 
     assert(compactions.get() >= 1, "file pressure must have tripped at least once")
     // conservation: every ingested row present exactly once
-    val got = spark.read.parquet(table).collect()
+    val got = graft.Tables.parquet(spark, table).collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     val want = batches.flatten.sorted
     assert(got == want, "table must hold exactly the ingested rows")
+    assert(StoreManifest.snapshot(spark, table).batchId.contains(7L))
     // the last maintenance pass left the listing at/below pressure + the
     // appends that followed it
     val files = CompactionPlanner.fileReport(spark, table).count()
@@ -41,7 +42,7 @@ class StreamingCompactionSpec extends SparkSpec {
 
     // a second identical check with no pressure is a no-op
     val ran = StreamingCompaction.maintainIfPressured(spark, table,
-      s"$root/work2", maxFiles = 1000, targetBytes = 512L * 1024)
+      maxFiles = 1000, targetBytes = 512L * 1024)
     assert(!ran, "under-threshold tables must not be rewritten")
   }
 }
