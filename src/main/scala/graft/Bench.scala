@@ -168,16 +168,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.shuffleScaleOut(SessionTuning.inputSplits(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")), cpus.toInt)
-      // measure WITH the library's extensions: the optimizer rule is part
-      // of the engine being benchmarked
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = SessionTuning.driver(defaultCores = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Env-driven session sizing shared by the runnable mains (Bench,
-  * Verify, tools.TimeQueries).
+  * Verify, tools.TimeQueries), and the one session those mains build
+  * ([[driver]]).
   *
   * Input-split sizing is a per-deployment scale knob (SURVEY §5): the
   * right split is the one whose DECOMPRESSED work fits a task budget,
@@ -18,6 +19,22 @@ import org.apache.spark.sql.SparkSession
   * granularity.
   */
 object SessionTuning {
+  /** The driver-run session: `local[cores]` with `cores` shuffle
+    * partitions, UTC, no UI, [[inputSplits]] and [[shuffleScaleOut]],
+    * and the library's own extensions (native SQL functions and the
+    * window-topk optimizer rule are part of the verified and
+    * benchmarked engine). `cores` is `SPARK_GRAFT_CPUS`, else
+    * `defaultCores`. */
+  def driver(defaultCores: Int, extensions: Boolean = true): SparkSession.Builder = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").fold(defaultCores)(_.toInt)
+    val b = shuffleScaleOut(inputSplits(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")), cores)
+    if (extensions) b.withExtensions(new GraftExtensions) else b
+  }
+
   def inputSplits(b: SparkSession.Builder): SparkSession.Builder =
     sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").fold(b) { v =>
       b.config("spark.sql.files.maxPartitionBytes", v)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,7 @@ object Verify {
     // optional third arg: comma-separated subset of query keys (targeted
     // re-verification while iterating; the driver always runs all)
     val keys = if (args.length > 2) args(2).split(",").toSet else SparkEntry.queries.keySet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.shuffleScaleOut(SessionTuning.inputSplits(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")), cpus.toInt)
-      // the library's own extensions (native SQL functions + the
-      // window-topk optimizer rule) are part of the verified surface
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = SessionTuning.driver(defaultCores = 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => keys.contains(q._1)).foreach { case (name, fn) =>

@@ -129,7 +129,7 @@ object Approx {
     * the 3072-row grid broadcast with the 10-row exploded sliver. */
   def a3CmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
-      .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))).as("w"))
+      .select(explode(TextAnalysis.words(col("text"))).as("w"))
     val grid = toks.select(cmsBuckets(col("w")).as(Seq("d", "b")))
       .groupBy("d", "b").agg(count(lit(1)).as("c"))
     val top = toks.groupBy("w").agg(count(lit(1)).as("exact_cnt"))
@@ -145,7 +145,7 @@ object Approx {
   val a3Sql: String = {
     val depths = (0 until CmsDepth).map(d => s"($d)").mkString(",")
     s"""WITH toks AS (
-       | SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+       | SELECT unnest(regexp_extract_all(lower(text), '${TextAnalysis.WordRe}')) AS w
        | FROM documents),
        |grid AS (
        | SELECT d, b, count(*) AS c FROM (

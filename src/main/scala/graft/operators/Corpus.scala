@@ -17,11 +17,11 @@ import graft.Tables
   */
 object Corpus {
 
-  private val WordRe = "[a-z0-9]+"
+  import TextAnalysis.{WordRe, words}
 
   /** whitespace-free token count, identical in both engines. */
   private def tokenCount(text: org.apache.spark.sql.Column) =
-    size(regexp_extract_all(lower(text), lit(WordRe), lit(0))).cast("long")
+    size(words(text)).cast("long")
 
   // ---- t13: sequence packing ----
 
@@ -335,8 +335,7 @@ object Corpus {
     val corpus = d.unionByName(d.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 100000).as("doc_id"), col("text"), col("lang"), col("source")))
     val screened = corpus
-      .withColumn("tok",
-        size(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))).cast("long"))
+      .withColumn("tok", tokenCount(col("text")))
       .filter(col("tok") >= 10 && col("tok") <= 2000 &&
         lower(col("text")).rlike("\\b(the|a|of|and|to|in|is)\\b"))
     screened
@@ -352,17 +351,17 @@ object Corpus {
   }
 
   val p1Sql: String =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, text, lang, source FROM documents
       |  UNION ALL
       |  SELECT doc_id + 100000 AS doc_id, text, lang, source
       |  FROM documents WHERE doc_id % 10 = 0),
       |screened AS (
       |  SELECT doc_id, text, lang, source,
-      |    cast(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS bigint) AS tok
+      |    cast(len(regexp_extract_all(lower(text), '$WordRe')) AS bigint) AS tok
       |  FROM corpus
-      |  WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) BETWEEN 10 AND 2000
-      |    AND regexp_matches(lower(text), '\b(the|a|of|and|to|in|is)\b')),
+      |  WHERE len(regexp_extract_all(lower(text), '$WordRe')) BETWEEN 10 AND 2000
+      |    AND regexp_matches(lower(text), '\\b(the|a|of|and|to|in|is)\\b')),
       |surv AS (
       |  SELECT md5(text) AS fp,
       |    min_by(lang, doc_id) AS lang, min_by(source, doc_id) AS source,
@@ -703,8 +702,7 @@ object Corpus {
   def p5TrainingShards(s: SparkSession, dir: String): DataFrame = {
     val clean = Quality.c4Clean(s, dir)
     val toks = clean.select(col("doc_id"),
-      graft.functions.BpeCountF.count(
-        regexp_extract_all(lower(col("text")), lit(WordRe), lit(0))).as("bpe"),
+      graft.functions.BpeCountF.count(words(col("text"))).as("bpe"),
       graft.functions.Md5PrefixModF(col("text"), Dedup.P).as("h"))
     packSequences(toks.select("doc_id", "bpe"), "doc_id", "bpe", PackWindow, PackBucket)
       .join(toks.select("doc_id", "h"), Seq("doc_id"))

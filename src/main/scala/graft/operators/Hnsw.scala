@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import graft.Tables
-import graft.functions.{TopK, VectorExpressions => V}
+import graft.functions.{TopK, TopKBuffer, VectorExpressions => V}
 
 /** s21: graph-based ANN — the HNSW index SHAPE the reference actually
   * serves from (customTrainDataController.js:28-86 builds an hnswlib
@@ -487,9 +487,9 @@ object Hnsw {
   /** Driver-local replication of [[expandTopKFrames]] — bit-identical
     * by construction (HnswReportEquivalenceSpec pins it on the real
     * corpus and the duplicate-embedding fixture):
-    *   - both top-K cuts are TopKBuffer's exact order (score desc via
-    *     Double.compare with -0.0 normalized at insert, id asc) and
-    *     skip null inputs like the aggregate's update;
+    *   - both top-K cuts are the aggregate's own [[TopKBuffer]] (score
+    *     desc via Double.compare with -0.0 normalized at insert, id asc)
+    *     and skip null inputs like the aggregate's update;
     *   - the (qid, cemb) dedup and the replica-expansion join use
     *     Spark's normalized float-array equality (-0.0 == 0.0,
     *     NaN == NaN) via normalized-bits keys; which duplicate survives
@@ -502,11 +502,6 @@ object Hnsw {
     def embKey(a: Array[Float]): IndexedSeq[Int] =
       a.iterator.map(f =>
         java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)).toIndexedSeq
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
-    @inline def norm0(s: Double): Double = if (s == 0.0d) 0.0d else s
     val vRows = visited.select("qid", "node", "sc").collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toArray
@@ -515,9 +510,9 @@ object Hnsw {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
     // top-K canonical node ids per qid
     val topIds: Map[Long, Set[Long]] = vRows.groupBy(_._1).map { case (q, rs) =>
-      q -> rs.map(r => (norm0(r._3), r._2))
-        .sortWith((a, b) => beats(a._1, a._2, b._1, b._2)).take(K)
-        .map(_._2).toSet
+      val top = new TopKBuffer(K)
+      rs.foreach(r => top.insert(r._3, r._2))
+      q -> top.sortedIds.toSet
     }
     val topCanon = vRows.filter(r => topIds.get(r._1).exists(_.contains(r._2)))
     val allTop: Set[Long] = topCanon.iterator.map(_._2).toSet
@@ -536,18 +531,14 @@ object Hnsw {
     // replica expansion: every e0 row whose embedding normalized-equals
     // a kept cemb, then the per-qid top-K over (sc, vec_id)
     val e0ByKey = eRows.groupBy(r => embKey(r._2))
-    val perQ = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
+    val perQ = scala.collection.mutable.HashMap.empty[Long, TopKBuffer]
     cands.foreach { case (q, sc, k) =>
       e0ByKey.getOrElse(k, Array.empty[(Long, Array[Float])]).foreach { case (id, _) =>
-        perQ.getOrElseUpdate(q,
-          scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]) +=
-          ((norm0(sc), id))
+        perQ.getOrElseUpdate(q, new TopKBuffer(K)).insert(sc, id)
       }
     }
-    val out = perQ.iterator.flatMap { case (q, cs) =>
-      cs.sortWith((a, b) => beats(a._1, a._2, b._1, b._2)).take(K)
-        .iterator.zipWithIndex.map { case ((_, id), pos) => (q, pos + 1, id) }
+    val out = perQ.iterator.flatMap { case (q, top) =>
+      top.sortedIds.iterator.zipWithIndex.map { case (id, pos) => (q, pos + 1, id) }
     }.toSeq
     val parts = math.max(1, math.min(
       spark.sparkContext.defaultParallelism, out.size / 50000 + 1))
@@ -654,7 +645,7 @@ object Hnsw {
     * the same double-accumulated cosine ([[graft.functions.CosineSimilarity]]'s
     * loop, float inputs, zero-norm ⇒ 0.0), the same greedy argmax tie
     * order (score, then LOWER node id), the same per-hop candidate
-    * dedup/anti-join, the same top-ef beam order ([[TopKBuffer]]'s:
+    * dedup/anti-join, the same top-ef beam cut (a [[TopKBuffer]]:
     * score desc, id asc), the same hop caps, the same fixed points. A
     * per-query walk equals the global-loop frame walk because a query
     * whose hop adds no candidate is at ITS fixed point — further global
@@ -745,9 +736,9 @@ object Hnsw {
         if (cand.isEmpty) exhausted = true
         else {
           cand.foreach { case (nid, nemb) => visited(nid) = Similarity.cosLocal(qemb, nemb) }
-          beam = visited.toArray
-            .sortWith((a, b) => beats(a._2, a._1, b._2, b._1))
-            .take(ef).map(_._1)
+          val top = new TopKBuffer(ef)
+          visited.foreach { case (node, sc) => top.insert(sc, node) }
+          beam = top.sortedIds
         }
         hop += 1
       }
@@ -1206,7 +1197,7 @@ object Hnsw {
     *     float-array equality (-0.0 == 0.0, NaN == NaN; null keys never
     *     match) — replicated via normalized-bits keys;
     *   - re-trim scores are [[Similarity.cosLocal]] (the proven
-    *     CosineSimilarity replication) with TopKBuffer's exact order
+    *     CosineSimilarity replication) cut by a [[TopKBuffer]]
     *     (score desc via Double.compare with -0.0 normalized, id asc);
     *   - one candidate row per (layer, node, nbr) like dropDuplicates
     *     (nemb is functionally determined by nbr, and the re-trim
@@ -1266,24 +1257,20 @@ object Hnsw {
     val cands = (masked.iterator.filter(r => affected((r._1, r._2))) ++ bridge)
       .filter { case (l, n, b, _) => candSeen.add((l, n, b)) }.toArray
     val survEmb: Map[Long, Array[Float]] = survRows.toMap
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
     val retrim = cands.groupBy(r => (r._1, r._2)).iterator.flatMap {
       case ((layer, node), rs) =>
         val en = survEmb.get(node).orNull
         if (en == null) Iterator.empty // absent node or null emb_n drop the list
-        else rs.iterator.flatMap { case (_, _, b, ne) =>
-          if (ne == null) None // a null score never enters the aggregate
-          else {
-            val s0 = Similarity.cosLocal(en, ne)
-            Some((if (s0 == 0.0d) 0.0d else s0, b)) // TopKBuffer's -0.0 → 0.0
+        else {
+          val top = new TopKBuffer(M)
+          rs.foreach { case (_, _, b, ne) =>
+            // a null score never enters the aggregate
+            if (ne != null) top.insert(Similarity.cosLocal(en, ne), b)
           }
-        }.toArray
-          .sortWith((a, c) => beats(a._1, a._2, c._1, c._2)).take(M).iterator
-          .filter { case (_, b) => survEmb.contains(b) }
-          .map { case (_, b) => (layer, node, b, survEmb(b)) }
+          top.sortedIds.iterator
+            .filter(survEmb.contains)
+            .map(b => (layer, node, b, survEmb(b)))
+        }
     }.toSeq
     val untouched = masked.iterator
       .filterNot(r => affected((r._1, r._2))).toSeq

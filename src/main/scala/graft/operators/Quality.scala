@@ -33,14 +33,8 @@ import graft.Tables
   */
 object Quality {
 
-  // ---- shared word/line primitives (Java regex ≡ RE2 syntax) ----
-
-  private val WordRe = "[a-z0-9]+"
-
-  /** lowercase word list — identical tokenization in both engines
-    * (group 0 = the full match; Spark defaults to group 1, DuckDB to 0). */
-  private def words(text: Column): Column =
-    regexp_extract_all(lower(text), lit(WordRe), lit(0))
+  // the shared word analyzer (Java regex ≡ RE2 syntax)
+  import TextAnalysis.{WordRe, words}
 
   // ---- t8: Gopher-style quality rules ----
 

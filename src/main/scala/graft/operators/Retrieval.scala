@@ -33,12 +33,18 @@ import graft.functions.{TopK, VectorExpressions => V}
   * and summed as integers — so cross-engine hashes match exactly.
   * RRF is pure integer arithmetic over ranks.
   *
+  * One lexical body ([[bm25Batch]]) serves every relational BM25 shape:
+  * a single query is a one-qid (qid, term) relation of its distinct
+  * terms, so query terms enter every plan as data, never as literals,
+  * and two queries of any term count share one plan shape.
+  *
   * Scale notes:
   *  - the corpus-sized work in BM25 is ONE tokenize pass feeding two
   *    map-combined aggregates (per-doc length; per-(doc,term) tf for
-  *    QUERY TERMS ONLY — the isin filter prunes before the shuffle, so
-  *    the tf exchange is bound by docs-containing-query-terms, the
-  *    selective case at a real 100 TB corpus);
+  *    QUERY TERMS ONLY — a broadcast semi-join on the query's terms
+  *    prunes before the shuffle, so the tf exchange is bound by
+  *    docs-containing-query-terms, the selective case at a real 100 TB
+  *    corpus);
   *  - df and idf live on a ≤|query| row sliver, broadcast back;
   *  - the corpus-wide (n_docs, total_tokens) scalar is a one-row
   *    broadcast (the q40 rule: never a window for a global constant);
@@ -48,6 +54,7 @@ import graft.functions.{TopK, VectorExpressions => V}
   *    two legs.
   */
 object Retrieval {
+  import TextAnalysis.{WordRe, words}
 
   /** Fixed demo query (the reference hard-codes top-10 retrieval per
     * user question; the term set stands in for the analyzed question). */
@@ -55,23 +62,14 @@ object Retrieval {
   val K1 = 1.2
   val B  = 0.75
   val TopN = 20
-  private val WordRe = "[a-z0-9]+"
-
-  private def words(text: Column): Column =
-    regexp_extract_all(lower(text), lit(WordRe), lit(0))
-
-  /** The (doc_id, score_micro) BM25-scored sliver — shared by t26 and
-    * the s13 lexical leg. Only docs containing ≥1 query term appear. */
-  private[operators] def bm25Scored(s: SparkSession, dir: String): DataFrame =
-    bm25ScoredFrame(Tables.documents(s, dir).select("doc_id", "text"))
 
   /** The per-(doc,term) BM25 contribution in micro units, over columns
     * (idf_micro, tf, dl, n_docs, total_tokens) — ONE definition shared
-    * by the in-session query, the stored-stats batch scorer, and the
-    * row-local streaming scorer, so batch ≡ stored ≡ stream is
-    * structural. r = dl/avgdl computed as (dl·n_docs)/total — exact
-    * int64 operands, ONE division; identical association order in the
-    * SQL twin. */
+    * by the relational body ([[bm25Batch]], in session or over stored
+    * stats) and the row-local streaming scorer, so batch ≡ stored ≡
+    * stream is structural. r = dl/avgdl computed as (dl·n_docs)/total —
+    * exact int64 operands, ONE division; identical association order in
+    * the SQL twin. */
   private[graft] def bm25Contrib(idfMicro: Column, tf: Column, dl: Column,
                                  nDocs: Column, total: Column): Column = {
     // each factor cast to double BEFORE the multiply (the t19 rule): the
@@ -88,26 +86,70 @@ object Retrieval {
   private def idfMicroCol(df: Column, nDocs: Column): Column =
     floor(log((nDocs - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)) * 1e6).cast("long")
 
-  /** Corpus-parameterized body of [[bm25Scored]] (spec fixtures; the
-    * term set defaults to the demo query and is the public knob). */
-  private[graft] def bm25ScoredFrame(docs: DataFrame,
-      terms: Seq[String] = QueryTerms): DataFrame = {
+  /** THE relational BM25 body: (qid, doc_id, score_micro) for a batch
+    * of analyzed queries, a (qid, term) relation, in ONE corpus pass.
+    * The reference serves one embedded question per request
+    * (conversationController.js:31-38); a serving tier batches them, and
+    * the plan amortizes the corpus-sized work (one tokenize pass, one
+    * per-(doc,term) tf aggregate over the UNION of all queries' terms)
+    * across every query. df/idf are per-term collection statistics —
+    * independent of which query asked — so the per-(doc,term)
+    * contributions are computed ONCE and fan out to queries by a
+    * broadcast (qid, term) join AFTER the corpus-sized work, never
+    * corpus × queries. Terms no query asked for never enter the tf
+    * shuffle (a broadcast semi-join on the batch's terms — a
+    * post-explode filter, not a scan pushdown).
+    *
+    * Collection statistics: `stored = None` computes idf, n_docs and
+    * total_tokens from the scored documents (in session); `Some(path)`
+    * reads them from a [[t26StatsWrite]] artifact, frozen at index time
+    * (scoring a new batch does not shift them — the Lucene segment
+    * contract), whose vocabulary also drops out-of-index terms.
+    *
+    * A repeated (qid, term) pair counts twice: a single query enters
+    * through [[queryRelation]], which keeps its distinct terms. */
+  private[graft] def bm25Batch(docs: DataFrame, qterms: DataFrame,
+      stored: Option[String] = None): DataFrame = {
     val toks = docs.select(col("doc_id"), explode(words(col("text"))).as("term"))
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tokens"))
-    val tf = toks.filter(col("term").isin(terms: _*))
+    val asked = broadcast(qterms)
+    val tf = toks.join(asked, Seq("term"), "left_semi")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val idf = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), idfMicroCol(col("df"), col("n_docs")).as("idf_micro"),
-        col("n_docs"), col("total_tokens"))
+    val idf = stored match {
+      case None =>
+        val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tokens"))
+        tf.groupBy("term").agg(count(lit(1)).as("df"))
+          .crossJoin(broadcast(stats))
+          .select(col("term"), idfMicroCol(col("df"), col("n_docs")).as("idf_micro"),
+            col("n_docs"), col("total_tokens"))
+      case Some(path) =>
+        val s = docs.sparkSession
+        Tables.parquet(s, s"$path/idf").select("term", "idf_micro")
+          .join(asked, Seq("term"), "left_semi")
+          .crossJoin(broadcast(
+            Tables.parquet(s, s"$path/stats").select("n_docs", "total_tokens")))
+    }
     tf.join(broadcast(idf), Seq("term"))
       .join(dl, Seq("doc_id"))
-      .select(col("doc_id"),
+      .select(col("doc_id"), col("term"),
         bm25Contrib(col("idf_micro"), col("tf"), col("dl"),
           col("n_docs"), col("total_tokens")).as("contrib"))
-      .groupBy("doc_id").agg(sum(col("contrib")).as("score_micro"))
+      .join(asked, Seq("term"))
+      .groupBy("qid", "doc_id").agg(sum(col("contrib")).as("score_micro"))
   }
+
+  /** One analyzed query as a [[bm25Batch]] input: qid 0 and its
+    * distinct terms, as data rather than plan literals. */
+  private[graft] def queryRelation(s: SparkSession, terms: Seq[String]): DataFrame = {
+    import s.implicits._
+    terms.distinct.map(t => (0L, t)).toDF("qid", "term")
+  }
+
+  /** One query's (doc_id, score_micro) sliver — t26 and the s13 lexical
+    * leg. Only docs containing ≥1 query term appear. */
+  private def bm25Query(docs: DataFrame, terms: Seq[String],
+      stored: Option[String] = None): DataFrame =
+    bm25Batch(docs, queryRelation(docs.sparkSession, terms), stored).drop("qid")
 
   // ---- the persisted lexical index (deployment twin) ----
 
@@ -118,8 +160,8 @@ object Retrieval {
     * Vocabulary-bound, so the artifact is tiny relative to the corpus;
     * at 100 TB it is built by the same two map-combined aggregates and
     * any later query is served WITHOUT touching the indexed corpus
-    * again. Query-time idf reads prune to the query's terms (pushed
-    * isin filter on the vocab scan). */
+    * again. Query-time idf reads keep the query's terms (a broadcast
+    * semi-join on the vocab scan). */
   def t26StatsWrite(s: SparkSession, dir: String, path: String): Unit = {
     val toks = Tables.documents(s, dir).select("doc_id", "text")
       .select(col("doc_id"), explode(words(col("text"))).as("term"))
@@ -133,29 +175,13 @@ object Retrieval {
       .write.mode("overwrite").parquet(s"$path/idf")
   }
 
-  /** Score a (doc_id, text) batch against the stored stats: identical
-    * arithmetic to [[bm25ScoredFrame]] but idf/n_docs/avgdl come FROM
-    * THE ARTIFACT (frozen at index time — scoring a new batch does not
-    * shift the collection statistics, the Lucene segment contract). On
-    * the indexed corpus itself the scores are bit-identical to the
+  /** Score a (doc_id, text) batch against the stored stats: the
+    * [[bm25Batch]] body with idf/n_docs/avgdl FROM THE ARTIFACT. On the
+    * indexed corpus itself the scores are bit-identical to the
     * in-session query (spec-pinned). */
   def t26ScoreFrom(s: SparkSession, path: String, docs: DataFrame,
-                   terms: Seq[String] = QueryTerms): DataFrame = {
-    val idf = Tables.parquet(s, s"$path/idf")
-      .filter(col("term").isin(terms: _*)).select("term", "idf_micro")
-    val stats = Tables.parquet(s, s"$path/stats")
-    val toks = docs.select(col("doc_id"), explode(words(col("text"))).as("term"))
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val tf = toks.filter(col("term").isin(terms: _*))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    tf.join(broadcast(idf), Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        bm25Contrib(col("idf_micro"), col("tf"), col("dl"),
-          col("n_docs"), col("total_tokens")).as("contrib"))
-      .groupBy("doc_id").agg(sum(col("contrib")).as("score_micro"))
-  }
+                   terms: Seq[String] = QueryTerms): DataFrame =
+    bm25Query(docs, terms, stored = Some(path))
 
   /** ROW-LOCAL scoring column over (text, im: map<term,idf_micro>,
     * n_docs, total_tokens) — tf and dl from the document's own token
@@ -191,39 +217,6 @@ object Retrieval {
     1L -> Seq("window", "stream", "data"),
     2L -> Seq("table", "row", "zzqoov"))
 
-  /** Score a BATCH of analyzed queries — a (qid, term) DataFrame — in
-    * ONE corpus pass: the reference serves one embedded question per
-    * request (conversationController.js:31-38); a serving tier batches
-    * them, and the right plan amortizes the corpus-sized work (one
-    * tokenize pass, one per-(doc,term) tf aggregate over the UNION of
-    * all queries' terms) across every query in the batch. df/idf are
-    * per-term collection statistics — independent of which query asked —
-    * so the per-(doc,term) contributions are computed ONCE and fan out
-    * to queries by a broadcast (qid, term) join AFTER the corpus-sized
-    * work, never corpus × queries. Terms no query asked for never enter
-    * the tf shuffle (broadcast semi-join on the batch's distinct terms —
-    * same pruning class as the single-query isin, which is a post-
-    * explode filter, not a scan pushdown, in both forms). */
-  private[graft] def bm25ScoredBatchFrame(docs: DataFrame, qterms: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"), explode(words(col("text"))).as("term"))
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tokens"))
-    val batchTerms = qterms.select("term").distinct()
-    val tf = toks.join(broadcast(batchTerms), Seq("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val idf = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), idfMicroCol(col("df"), col("n_docs")).as("idf_micro"),
-        col("n_docs"), col("total_tokens"))
-    tf.join(broadcast(idf), Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .select(col("doc_id"), col("term"),
-        bm25Contrib(col("idf_micro"), col("tf"), col("dl"),
-          col("n_docs"), col("total_tokens")).as("contrib"))
-      .join(broadcast(qterms), Seq("term"))
-      .groupBy("qid", "doc_id").agg(sum(col("contrib")).as("score_micro"))
-  }
-
   /** t27: the BM25 batch-serving query — top-10 docs per query for the
     * [[BatchQueries]] fixture, ranked within each qid. The public API is
     * [[t27Bm25Batch(s,dir,qterms)]] with an arbitrary (qid, term)
@@ -247,9 +240,7 @@ object Retrieval {
 
   /** Batch BM25 with a caller-supplied (qid, term) query frame. */
   def t27Bm25Batch(s: SparkSession, dir: String, qterms: DataFrame): DataFrame = {
-    val scored = bm25ScoredBatchFrame(
-      Tables.documents(s, dir).select("doc_id", "text"), qterms)
-    scored
+    bm25Batch(Tables.documents(s, dir).select("doc_id", "text"), qterms)
       .withColumn("rank", row_number().over(
         Window.partitionBy("qid").orderBy(col("score_micro").desc, col("doc_id").asc)))
       .filter(col("rank") <= RrfK)
@@ -295,7 +286,7 @@ object Retrieval {
 
   /** t26: BM25 top-20 over the documents corpus for the fixed query. */
   def t26Bm25(s: SparkSession, dir: String): DataFrame =
-    bm25Scored(s, dir)
+    bm25Query(Tables.documents(s, dir).select("doc_id", "text"), QueryTerms)
       .orderBy(col("score_micro").desc, col("doc_id").asc)
       .limit(TopN)
       .withColumn("rank", row_number().over(
@@ -358,11 +349,24 @@ object Retrieval {
     * family's rank-stability contract); everything downstream of the
     * two rank lists is exact integer arithmetic. */
   def s13RrfHybrid(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val q = e.filter(col("vec_id") === DenseQid)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-    s13Fused(s, dir, QueryTerms, q, excludeSelf = true)
+    val (docs, e) = ragTables(s, dir)
+    s13Fused(docs, e, QueryTerms, storeQuery(e), excludeSelf = true)
   }
+
+  /** The two tables a retrieval turn reads, each loaded once per turn
+    * and handed to every leg that scans it. */
+  private def ragTables(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (Tables.documents(s, dir).select("doc_id", "text"),
+      Tables.embeddings(s, dir).select("vec_id", "embedding"))
+
+  /** The registered rows' dense query: store member [[DenseQid]]. */
+  private def storeQuery(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") === DenseQid)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+
+  /** An external one-row (qemb) query frame, keyed like [[storeQuery]]. */
+  private def externalQuery(queryVec: DataFrame): DataFrame =
+    queryVec.select(lit(-1L).as("qid"), col("qemb"))
 
   /** [[s13RrfHybrid]] for an EXTERNAL serving query: an analyzed term
     * list for the lexical leg and a one-row (qemb) embedding frame for
@@ -370,19 +374,19 @@ object Retrieval {
     * question, conversationController.js:31-38), which is NOT a store
     * member, so no self-exclusion. */
   def s13RrfHybridFor(s: SparkSession, dir: String, terms: Seq[String],
-      queryVec: DataFrame): DataFrame =
-    s13Fused(s, dir, terms,
-      queryVec.select(lit(-1L).as("qid"), col("qemb")), excludeSelf = false)
+      queryVec: DataFrame): DataFrame = {
+    val (docs, e) = ragTables(s, dir)
+    s13Fused(docs, e, terms, externalQuery(queryVec), excludeSelf = false)
+  }
 
-  private def s13Fused(s: SparkSession, dir: String, terms: Seq[String],
+  private def s13Fused(docs: DataFrame, e: DataFrame, terms: Seq[String],
       q: DataFrame, excludeSelf: Boolean): DataFrame = {
-    val lex = bm25ScoredFrame(Tables.documents(s, dir).select("doc_id", "text"), terms)
+    val lex = bm25Query(docs, terms)
       .orderBy(col("score_micro").desc, col("doc_id").asc)
       .limit(TopN)
       .withColumn("lex_rank", row_number().over(
         Window.orderBy(col("score_micro").desc, col("doc_id").asc)))
       .select("doc_id", "lex_rank")
-    val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val denseBase =
       if (excludeSelf) e.join(broadcast(q), col("vec_id") =!= col("qid"))
       else e.crossJoin(broadcast(q))
@@ -466,25 +470,27 @@ object Retrieval {
     * agree). Output is rank-only (the s1 stability rule) plus exact
     * integer token counts. */
   def p4RagContext(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val q = e.filter(col("vec_id") === DenseQid).select(col("embedding").as("qemb"))
-    p4Frame(s, dir, s13RrfHybrid(s, dir), q)
+    val (docs, e) = ragTables(s, dir)
+    val q = storeQuery(e)
+    p4Frame(docs, e, s13Fused(docs, e, QueryTerms, q, excludeSelf = true), q)
   }
 
   /** [[p4RagContext]] for an EXTERNAL serving query — the full composed
     * pipeline (hybrid retrieve → MMR → token ledger) on an analyzed
     * term list + a one-row (qemb) embedding frame. */
   def p4RagContextFor(s: SparkSession, dir: String, terms: Seq[String],
-      queryVec: DataFrame): DataFrame =
-    p4Frame(s, dir, s13RrfHybridFor(s, dir, terms, queryVec),
-      queryVec.select(col("qemb")))
+      queryVec: DataFrame): DataFrame = {
+    val (docs, e) = ragTables(s, dir)
+    val q = externalQuery(queryVec)
+    p4Frame(docs, e, s13Fused(docs, e, terms, q, excludeSelf = false), q)
+  }
 
-  private def p4Frame(s: SparkSession, dir: String, fused: DataFrame,
+  private def p4Frame(docs: DataFrame, e: DataFrame, fused: DataFrame,
       q: DataFrame): DataFrame = {
+    val s = e.sparkSession
     import s.implicits._
-    val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val cand0 = e.join(broadcast(fused.select(col("doc_id"))), col("vec_id") === col("doc_id"))
-      .crossJoin(broadcast(q))
+      .crossJoin(broadcast(q.select(col("qemb"))))
       .select(col("doc_id"), V.cosine(col("qemb"), col("embedding")).as("rel"),
         col("embedding").as("cemb"))
     // broadcast-local greedy (Similarity.mmrGreedyLocal — bit-identical
@@ -494,16 +500,15 @@ object Retrieval {
     // gate
     val cs = cand0.collect().map(r => (0L, r.getLong(0), r.getDouble(1),
       r.getSeq[Float](2).toArray))
-    p4Ledger(s, dir,
+    p4Ledger(docs,
       Similarity.mmrGreedyLocal(cs, P4K, Similarity.MmrLambda)
         .map { case (_, id, rank) => (id, rank) }
         .toDF("doc_id", "rank").coalesce(1))
   }
 
   /** The token-budget ledger tail of p4. */
-  private def p4Ledger(s: SparkSession, dir: String, sel: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = Tables.documents(s, dir).select(col("doc_id"),
+  private def p4Ledger(docs: DataFrame, sel: DataFrame): DataFrame = {
+    val toks = docs.select(col("doc_id"),
       size(words(col("text"))).cast("long").as("n_tokens"))
     sel.join(toks, Seq("doc_id"))
       .withColumn("cum_tokens",

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{TopK, VectorExpressions => V}
+import graft.functions.{TopK, TopKBuffer, VectorExpressions => V}
 
 /** Vector store + similarity search: the reference's Pinecone/hnswlib
   * surface (embeddingController.js upsert/delete; customTrainDataController.js
@@ -155,8 +155,8 @@ object Similarity {
 
   /** Driver-local replication of the frame brute top-k — bit-identical
     * by construction: [[cosLocal]] is the codegen'd CosineSimilarity's
-    * exact loop, the cut is TopKBuffer's exact order (score desc via
-    * Double.compare with -0.0 normalized at insert, id asc), null
+    * exact loop, the cut is the aggregate's own [[TopKBuffer]] (score
+    * desc via Double.compare with -0.0 normalized at insert, id asc), null
     * corpus keys/embeddings are skipped like the aggregate's update,
     * a null-qemb query emits no rows (the frame's empty-array explode),
     * and the self-exclusion join predicate is applied pre-scoring.
@@ -173,22 +173,14 @@ object Similarity {
     val cs = corpus.select("vec_id", "embedding").collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
-    @inline def beats(s: Double, i: Long, s2: Double, i2: Long): Boolean = {
-      val c = java.lang.Double.compare(s, s2)
-      c > 0 || (c == 0 && i < i2)
-    }
     val out = qs.iterator.flatMap { case (qid, qemb) =>
       if (qemb == null) Iterator.empty
       else {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
+        val buf = new TopKBuffer(k)
         cs.foreach { case (id, emb) =>
-          if (!(excludeSelf && id == qid)) {
-            val s = cosLocal(qemb, emb)
-            buf += ((if (s == 0.0d) 0.0d else s, id))
-          }
+          if (!(excludeSelf && id == qid)) buf.insert(cosLocal(qemb, emb), id)
         }
-        buf.sortWith((a, b) => beats(a._1, a._2, b._1, b._2)).take(k)
-          .iterator.zipWithIndex.map { case ((_, id), pos) => (qid, pos + 1, id) }
+        buf.sortedIds.iterator.zipWithIndex.map { case (id, pos) => (qid, pos + 1, id) }
       }
     }.toSeq
     Some(out.toDF("qid", "rank", "neighbor").coalesce(1).orderBy("qid", "rank"))

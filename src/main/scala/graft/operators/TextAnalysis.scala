@@ -18,6 +18,15 @@ import graft.Tables
   */
 object TextAnalysis {
 
+  /** The word analyzer every lexical operator shares (BM25, quality,
+    * corpus, sketches): lowercase runs of [[WordRe]]. The DuckDB twins
+    * interpolate the same constant, so both engines tokenize alike
+    * (group 0 = the full match; Spark defaults to group 1, DuckDB to 0). */
+  private[graft] final val WordRe = "[a-z0-9]+"
+
+  private[graft] def words(text: Column): Column =
+    regexp_extract_all(lower(text), lit(WordRe), lit(0))
+
   /** whitespace-token count — matches of \S+. regexp_count never
     * materializes the match array (t1 went 4x faster than the
     * size(regexp_extract_all(...)) formulation). */
@@ -297,10 +306,6 @@ object TextAnalysis {
        |ORDER BY doc_id, chunk_idx""".stripMargin
 
   // ---- t21/t22: exact BPE token counting + BPE-priced costing ----
-
-  private val WordRe = "[a-z0-9]+"
-  private def words(text: Column): Column =
-    regexp_extract_all(lower(text), lit(WordRe), lit(0))
 
   /** t21: EXACT BPE token count per document (reference:
     * trackUsageService.js:46-48 counts usage with tiktoken's BPE; t1 is

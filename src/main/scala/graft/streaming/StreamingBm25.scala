@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Retrieval
+import graft.operators.{Retrieval, TextAnalysis}
 
 /** Online LEXICAL SCORING: score an arriving document stream against the
   * STORED BM25 index statistics (graft.operators.Retrieval.t26StatsWrite)
@@ -36,9 +36,6 @@ object StreamingBm25 {
     * least one query term — the same contract as the batch scorer. */
   def scoreAgainstStore(stream: DataFrame, idf: DataFrame, stats: DataFrame,
                         terms: Seq[String] = Retrieval.QueryTerms): DataFrame = {
-    val model = idf.filter(col("term").isin(terms: _*))
-      .agg(map_from_entries(collect_list(struct(col("term"), col("idf_micro")))).as("im"))
-      .crossJoin(stats.select(col("n_docs"), col("total_tokens")))
     // an empty `array()` literal types as array<null> and fails the
     // array_intersect analysis — give the degenerate no-terms case
     // (reachable through the public parameter) an explicit string type;
@@ -46,8 +43,11 @@ object StreamingBm25 {
     val termsArr =
       if (terms.isEmpty) array().cast("array<string>")
       else array(terms.map(lit): _*)
+    val model = idf.filter(array_contains(termsArr, col("term")))
+      .agg(map_from_entries(collect_list(struct(col("term"), col("idf_micro")))).as("im"))
+      .crossJoin(stats.select(col("n_docs"), col("total_tokens")))
     stream
-      .withColumn("toks", regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)))
+      .withColumn("toks", TextAnalysis.words(col("text")))
       .filter(size(array_intersect(col("toks"), termsArr)) > 0)
       .crossJoin(broadcast(model))
       // membership matches the batch scorer exactly: a doc whose only

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual SparkEntry queries under the Bench session
   * shape. Usage: runMain graft.tools.TimeQueries <sfDir> [--plain] name...
   * (--plain builds the session without GraftExtensions, to isolate the
@@ -17,13 +15,9 @@ object TimeQueries {
         val Array(k, v) = kv.split("=", 2); (k, v)
     }.toSeq
     val names = args.drop(1).filterNot(a => a.startsWith("--") || a.contains('='))
-    val b0 = graft.SessionTuning.shuffleScaleOut(graft.SessionTuning.inputSplits(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")), 32)
-    val b = confs.foldLeft(b0) { case (bb, (k, v)) => bb.config(k, v) }
-    val spark = (if (plain) b else b.withExtensions(new graft.GraftExtensions)).getOrCreate()
+    val spark = confs.foldLeft(graft.SessionTuning.driver(defaultCores = 32, extensions = !plain)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val qs: Seq[String] =
       if (names.isEmpty) graft.SparkEntry.queries.keys.toSeq.sorted else names.toSeq

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** The external-query serving surface (round-11): every ANN/retrieval
@@ -160,6 +161,36 @@ class ExternalQuerySpec extends SparkSpec {
     assert(ctx.length == Retrieval.P4K)
     val cums = ctx.sortBy(_.getInt(0)).map(_.getLong(3)).toSeq
     assert(cums == cums.sorted, "cum_tokens must be monotone in rank")
+  }
+
+  test("a serving turn with a repeated term equals the same turn with the term once") {
+    val qv = Similarity.externalQueries(spark, sfDir)
+      .filter(col("qid") === 1L).select(col("qemb"))
+    def turn(terms: Seq[String]) =
+      (Retrieval.s13RrfHybridFor(spark, sfDir, terms, qv).collect().toSeq,
+        Retrieval.p4RagContextFor(spark, sfDir, terms, qv).collect().toSeq)
+    assert(turn(Seq("window", "stream", "window", "data")) ==
+      turn(Seq("window", "stream", "data")))
+  }
+
+  test("after one warm turn, a turn with a different number of terms compiles nothing new") {
+    val qv = Similarity.externalQueries(spark, sfDir)
+      .filter(col("qid") === 2L).select(col("qemb"))
+    def turn(terms: Seq[String]) = Retrieval.s13RrfHybridFor(spark, sfDir, terms, qv).collect()
+    // Adaptive execution numbers whole-stage codegen stages in the order
+    // its query stages finish, and by default that number is part of the
+    // generated class name, so two runs of one plan can miss the codegen
+    // cache on timing alone. Without the number in the name, only a
+    // change in the plan itself (terms as literals) compiles new code.
+    val idInName = "spark.sql.codegen.useIdInClassName"
+    spark.conf.set(idInName, "false")
+    try {
+      turn(Seq("vector", "spark", "hash"))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      turn(Seq("window", "stream", "data", "table", "row"))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+        "the second turn compiled new code")
+    } finally spark.conf.unset(idInName)
   }
 
   test("IvfIndex.probe serves the external batch; full probe equals brute force") {

@@ -44,7 +44,8 @@ class RetrievalSpec extends SparkSpec {
       (4L, "window window hash"),
       (5L, "spark"))
     val df = corpus.toDF("doc_id", "text")
-    val got = Retrieval.bm25ScoredFrame(df).collect()
+    val got = Retrieval.bm25Batch(df, Retrieval.queryRelation(spark, Retrieval.QueryTerms))
+      .drop("qid").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = bm25Reference(corpus)
     assert(got == want)

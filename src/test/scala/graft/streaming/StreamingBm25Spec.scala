@@ -12,9 +12,10 @@ class StreamingBm25Spec extends SparkSpec {
     val stored = Retrieval.t26ScoreFrom(spark, dir,
         graft.Tables.documents(spark, sfDir).select("doc_id", "text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val inSession = Retrieval.bm25ScoredFrame(
-        graft.Tables.documents(spark, sfDir).select("doc_id", "text"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val inSession = Retrieval.bm25Batch(
+        graft.Tables.documents(spark, sfDir).select("doc_id", "text"),
+        Retrieval.queryRelation(spark, Retrieval.QueryTerms))
+      .drop("qid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(stored == inSession)
   }
 
